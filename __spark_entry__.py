@@ -853,16 +853,12 @@ def _q_bfc_slices(spark, sf_dir):
 
 
 def _q_bft_slices(spark, sf_dir):
-    """Transposed-build layout pin, hash-matched: same rows as bf_slices
-    (|samples| x P), window bytes exact. Row-for-row equality with the
-    non-transposed build (incl. n_set and bitmap bytes, which are hash-
-    dependent and so excluded here) is pinned in test_bloom_stage."""
-    from kmtricks_spark.operators.bloom_stage import bft_slices
-
+    """Transposed-build layout pin, hash-matched: the bft mode runs
+    bf_slices (the reference transpose yields the same sample-major
+    rows), so |samples| x P rows with exact window bytes."""
     cfg = CFG.with_(nb_partitions=8, bloom_bits=1 << 18)
     counts = count_kgrams(_docs(spark, sf_dir), cfg)
-    samples = sorted(r.sample_id for r in counts.select("sample_id").distinct().collect())
-    s = bft_slices(hash_counts(counts, cfg), samples, cfg)
+    s = bf_slices(hash_counts(counts, cfg), cfg)
     return s.select("part_id", "sample_id", F.length("bitmap").alias("bitmap_bytes"))
 
 

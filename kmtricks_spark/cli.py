@@ -53,7 +53,8 @@ def _add_common(p):
     p.add_argument("--hist-upper", type=int, default=0,
                    help="histogram upper bound (ref default 255); 0 = unbounded")
     p.add_argument("--bloom-size", type=int, default=10_000_000)
-    p.add_argument("--bitw", type=int, default=2)
+    p.add_argument("--bitw", type=int, choices=[1, 2, 4, 8], default=2,
+                   help="bfc cell width in bits; must divide 8")
     p.add_argument("--bloom-mode", choices=["bf", "bft", "bfc"], default="bf",
                    help="--mode hash:{bf,bft,bfc} analogue (cli.cpp:150-199)")
     p.add_argument("--export-filters", choices=["kmbf", "howdesbt"], default=None,

@@ -47,7 +47,6 @@ class KmConfig:
     text_col: str = "text"
     sample_col: str = "source"
     kgram_as_string: bool = True  # decode shingles to str (ASCII corpora) vs keep bytes
-    method: str = "auto"          # shingling path: auto | sql | sql_bytes | arrow
     alphabet: str | None = None   # None (text) | "dna" (canonical k-mers, ref parity)
     repartition_type: str = "static"  # static | sampled (R2/R3, task.hpp:183-199)
 

@@ -56,8 +56,8 @@ def hash64_np(windows: np.ndarray, seed: int = 0) -> np.ndarray:
     """Hash each row of a (n, width) unsigned-int array to uint64.
 
     Polynomial accumulate over the columns (bytes, or UCS4 codepoints for
-    token hashing) then splitmix64 avalanche. Used for minimizer
-    selection, shingle/token hashing, and sketch inputs in Arrow batches.
+    token hashing) then splitmix64 avalanche. Used for shingle/token
+    hashing and sketch inputs in Arrow batches.
     """
     if windows.ndim != 2:
         raise ValueError("expected a (n, width) array")

@@ -5,40 +5,20 @@ Semantic twin of the reference's k-mer enumeration + super-k-mer fill
 DNA-specific canonicalization (kmer.hpp:531-535) — a text shingle is its
 own canonical form.
 
-Two physical paths, same logical result:
-
-* ``kgrams_sql``  — pure Column expressions (explode(sequence) +
-  substring). Stays inside whole-stage codegen; character-based, which
-  equals byte-based on ASCII corpora. This is also the shape the DuckDB
-  oracle uses.
-* ``kgram_partials_arrow`` — ``mapInPandas`` over Arrow batches doing
-  numpy sliding windows over the raw UTF-8 **bytes** (byte-identical
-  extraction per url, per BASELINE input_hint), and emitting
-  **pre-counted** ``(sample_id, part_id, kgram, pcount)`` rows. The
-  pre-count inside the map task is the Spark analogue of super-k-mer
-  shuffle compression: shuffle volume scales with per-batch *distinct*
-  shingles, not total.
+One physical path, ``kgrams_sql``: pure Column expressions
+(explode(sequence) + substring) that stay inside whole-stage codegen.
+Char mode is the shape the DuckDB oracle uses; bytes mode slides over
+the raw UTF-8 bytes, giving byte-identical extraction on any text. The
+super-k-mer shuffle compression of the reference comes from Spark's
+map-side partial aggregation in count_kgrams.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from kmtricks_spark.config import KmConfig
-from kmtricks_spark.functions.hashing import hash64_np
 
 
 def kgrams_sql(df: DataFrame, cfg: KmConfig, bytes_mode: bool = False) -> DataFrame:
@@ -89,109 +69,3 @@ def kgrams_sql(df: DataFrame, cfg: KmConfig, bytes_mode: bool = False) -> DataFr
         )
         .select("sample_id", kg.alias("kgram"))
     )
-
-
-def _shingle_schema(cfg: KmConfig) -> StructType:
-    kgram_t = StringType() if cfg.kgram_as_string else BinaryType()
-    return StructType(
-        [
-            StructField("sample_id", StringType()),
-            StructField("part_id", IntegerType()),
-            StructField("kgram", kgram_t),
-            StructField("pcount", LongType()),
-        ]
-    )
-
-
-def _windows_of(buf: np.ndarray, ends: np.ndarray, k: int) -> np.ndarray:
-    """All valid k-byte windows of concatenated docs (boundary-masked)."""
-    if buf.size < k:
-        return np.empty((0, k), dtype=np.uint8)
-    win = np.lib.stride_tricks.sliding_window_view(buf, k)
-    starts = np.arange(win.shape[0], dtype=np.int64)
-    doc_of = np.searchsorted(ends, starts, side="right")
-    valid = starts + k <= ends[doc_of]
-    return win[valid]
-
-
-def _unique_counts(windows: np.ndarray, k: int):
-    """(uniq (u,k) uint8, counts int64) via memcmp-ordered void sort."""
-    if windows.shape[0] == 0:
-        return np.empty((0, k), dtype=np.uint8), np.empty(0, dtype=np.int64)
-    contig = np.ascontiguousarray(windows)
-    if k == 8:
-        key = contig.view(np.uint64).ravel()
-        uq, counts = np.unique(key, return_counts=True)
-        uniq = uq.view(np.uint8).reshape(-1, 8)
-    else:
-        key = contig.view([("v", np.void, k)])["v"].ravel()
-        uq, counts = np.unique(key, return_counts=True)
-        uniq = uq.view(np.uint8).reshape(-1, k)
-    return uniq, counts.astype(np.int64)
-
-
-def minimizer_part_np(uniq: np.ndarray, m: int, nb_partitions: int) -> np.ndarray:
-    """part_id per unique k-gram = (min hash over its m-gram windows) % P.
-
-    Reference: Kmer::minimizer (kmer.hpp:591-629) + static repartition
-    XXH64(minim) % P (repartition.hpp:45-56). Vectorized: one hash pass
-    per m-offset, running minimum across offsets.
-    """
-    n, k = uniq.shape
-    if n == 0:
-        return np.empty(0, dtype=np.int32)
-    best = None
-    for off in range(k - m + 1):
-        h = hash64_np(uniq[:, off : off + m])
-        best = h if best is None else np.minimum(best, h)
-    return (best % np.uint64(nb_partitions)).astype(np.int32)
-
-
-def kgram_partials_arrow(df: DataFrame, cfg: KmConfig) -> DataFrame:
-    """Pre-counted shingle partials: (sample_id, part_id, kgram, pcount).
-
-    ``sum(pcount) group by (sample_id, kgram)`` equals the exact shingle
-    count — the partial is purely a shuffle-volume optimization
-    (super-k-mer analogue, superk.hpp:8-134).
-    """
-    k, m, P = cfg.k, cfg.m, cfg.nb_partitions
-    text_col, sample_col, as_str = cfg.text_col, cfg.sample_col, cfg.kgram_as_string
-    schema = _shingle_schema(cfg)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_s, out_p, out_g, out_c = [], [], [], []
-            for sample, grp in pdf.groupby(sample_col, sort=False):
-                texts = [t.encode("utf-8") for t in grp[text_col] if t]
-                if not texts:
-                    continue
-                buf = np.frombuffer(b"".join(texts), dtype=np.uint8)
-                ends = np.cumsum(np.array([len(t) for t in texts], dtype=np.int64))
-                uniq, counts = _unique_counts(_windows_of(buf, ends, k), k)
-                if uniq.shape[0] == 0:
-                    continue
-                parts = minimizer_part_np(uniq, m, P)
-                raw = uniq.tobytes()
-                grams = [raw[i * k : (i + 1) * k] for i in range(uniq.shape[0])]
-                if as_str:
-                    grams = [g.decode("utf-8", errors="surrogateescape") for g in grams]
-                out_s.append(np.full(len(grams), sample, dtype=object))
-                out_p.append(parts)
-                out_g.append(np.asarray(grams, dtype=object))
-                out_c.append(counts)
-            if not out_s:
-                yield pd.DataFrame(
-                    {"sample_id": [], "part_id": [], "kgram": [], "pcount": []}
-                ).astype({"part_id": "int32", "pcount": "int64"})
-                continue
-            yield pd.DataFrame(
-                {
-                    "sample_id": np.concatenate(out_s),
-                    "part_id": np.concatenate(out_p),
-                    "kgram": np.concatenate(out_g),
-                    "pcount": np.concatenate(out_c),
-                }
-            )
-
-    cols = [sample_col, text_col]
-    return df.select(*cols).mapInPandas(gen, schema=schema)

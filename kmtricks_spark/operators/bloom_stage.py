@@ -1,35 +1,32 @@
 """Bloom-filter stage: windowed hashing -> per-(sample, partition) slices
--> per-sample global filters, plus bft/bfc variants and the FPR report.
+-> per-sample global filters, plus the bfc variant and the FPR report.
 
 Reference parity (SURVEY §2 A6/A9/P8/P11/P13, S7):
 * hash-mode counts   — groupBy over the windowed hash (sorting_count.hpp:
   365-533, 908-997); collisions inside a window merge, as in the ref.
 * bf slices          — HashVecProcessor BITSET per hash (count_processor.
-  hpp:84-120) as a grouped-map bitmap build.
+  hpp:84-120) as a JVM bitmap_construct_agg build.
 * per-sample concat  — howde-style: sample filter = ordered concat of its
   partition windows (howde_utils.hpp:133-185); zero windows for absent
   partitions (merge.hpp:575-600).
-* bft                — per-partition bit transpose to sample-major rows
-  (merge.hpp:631-644, bitmatrix.hpp:209-242).
-* bfc                — ceil(log2(c+1)) packed w-bit cells (packc.hpp:16-43).
+* bft                — the reference's per-partition bit transpose
+  (merge.hpp:631-644) yields the same sample-major rows as bf, so both
+  modes run bf_slices.
+* bfc                — ceil(log2(c+1)) packed w-bit cells (packc.hpp:16-43),
+  built by the same bitmap build over a window_bits * w bit window.
 * fpr                — (1-e^{-n/m}) per (sample, partition) (utils.hpp:
   239-243, task.hpp:849-860).
+
+The only Python boundary in this module is bf_probe's cogroup.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from kmtricks_spark.config import KmConfig
 from kmtricks_spark.functions.hashing import windowed_hash_col
@@ -54,7 +51,7 @@ def hash_counts(counts: DataFrame, cfg: KmConfig) -> DataFrame:
     # clustered distribution, AND the downstream grouped builds
     # (bf/bfc_slices group on exactly these two keys), so the whole
     # hash_counts -> slices chain runs on ONE exchange instead of two
-    # (agg exchange on 3 keys + applyInPandas exchange on 2). hash_idx
+    # (agg exchange on 3 keys + slice-build exchange on 2). hash_idx
     # collisions merge in the (single-level) aggregate exactly as
     # before; rows shuffled are the same either way because collisions
     # are rare below full window load.
@@ -65,65 +62,54 @@ def hash_counts(counts: DataFrame, cfg: KmConfig) -> DataFrame:
     )
 
 
-_SLICE_SCHEMA = StructType(
-    [
-        StructField("part_id", IntegerType()),
-        StructField("sample_id", StringType()),
-        StructField("n_set", LongType()),
-        StructField("bitmap", BinaryType()),
-    ]
-)
-
-
 _BITMAP_BUCKET_BITS = 32768  # bits per bitmap_construct_agg bucket (4 KB)
 
 
-def bf_slices(hcounts: DataFrame, cfg: KmConfig, min_count: int = 1) -> DataFrame:
-    """One Bloom window per (partition, sample): (part_id, sample_id,
-    n_set, bitmap).
+def _ordered_concat(m: Column, keys: range, n_bytes: int) -> Column:
+    """Values of map `m`, each n_bytes long, concatenated in key order
+    and zero-filled for absent keys. One variadic concat: a left fold
+    would copy the growing prefix once per key (O(n^2) bytes per row).
+    The fill right-pads the looked-up value with zero bytes, because a
+    zero literal per key would put len(keys) * n_bytes bytes into the
+    plan (1.2 MB of plan text at 8 windows of 64 KB)."""
+    return F.concat(
+        *[
+            F.rpad(F.coalesce(F.element_at(m, F.lit(k)), F.lit(b"")), n_bytes, F.lit(b"\x00"))
+            for k in keys
+        ]
+    )
 
-    Pure-JVM build (r6): the window is assembled from Spark's native
-    bitmap aggregate instead of a grouped-map numpy pass — the former
-    applyInPandas version paid an Arrow round-trip of every hash row
-    plus one Python call + pandas frame per (partition, sample) group.
-    bitmap_construct_agg packs bits LSB-first per byte into fixed 4 KB
-    buckets, exactly the reference BITSET layout bloom.add_local_indices
-    uses, so the window blob is the ordered bucket concat (zero-filled
-    for absent buckets) truncated to window_bytes — byte-identical to
-    the numpy build (pinned by test; bft_slices keeps the numpy path, so
-    the existing bft==bf equality test cross-checks the layout). And
-    because hash_counts pre-partitions on (part_id, sample_id), BOTH
-    grouping levels here reuse that one exchange: the whole
-    hash_counts -> bf_slices chain is a single shuffle with zero Python.
 
-    min_count > 1 masks sub-threshold rows to NULL instead of filtering
-    them, so a fully-masked (part, sample) group still yields its
-    empty-bitmap row (a pre-filter would drop the group — the contract
-    is one row per group present in hcounts)."""
-    w = cfg.window_bits
-    n_buckets = (w + _BITMAP_BUCKET_BITS - 1) // _BITMAP_BUCKET_BITS
-    local = F.col("hash_idx") - F.col("part_id").cast("long") * F.lit(w)
-    # loud failure on an index outside its partition window (mis-routed
-    # or hand-built input): the numpy build raised IndexError here; the
-    # bucket arithmetic would otherwise silently truncate the bit while
-    # still counting it — a silent Bloom false negative downstream
-    v = F.when(
-        (local >= 0) & (local < w), local + 1  # bitmap_* functions are 1-based
-    ).otherwise(
+def _window_bitmaps(rows: DataFrame, pos: Column, n_bits: int) -> DataFrame:
+    """(part_id, sample_id, n_set, bitmap): one n_bits window per
+    (part_id, sample_id) group of `rows`, with bit `pos` (0-based,
+    LSB-first per byte — the reference BITSET layout) set for each row.
+    A NULL `pos` sets nothing but still yields its group's row.
+
+    Pure-JVM build: bitmap_construct_agg packs bits into fixed 4 KB
+    buckets in exactly that layout, so the window is the ordered bucket
+    concat (zero-filled for absent buckets) truncated to n_bits / 8
+    bytes. When `rows` is hash-partitioned on (part_id, sample_id), as
+    hash_counts leaves it, both grouping levels reuse that one exchange.
+    """
+    n_buckets = -(-n_bits // _BITMAP_BUCKET_BITS)
+    # bitmap_* functions are 1-based. Loud failure on a position outside
+    # the window (mis-routed or hand-built input): the bucket arithmetic
+    # would otherwise silently truncate the bit while still counting it
+    # — a silent Bloom false negative downstream
+    v = F.when(pos.isNull() | pos.between(0, n_bits - 1), pos + 1).otherwise(
         F.raise_error(
             F.concat(
-                F.lit("bf_slices: hash_idx outside its partition window: "),
-                F.col("hash_idx").cast("string"),
+                F.lit("Bloom build: bit position outside its partition window: "),
+                pos.cast("string"),
                 F.lit(" (part_id "),
                 F.col("part_id").cast("string"),
-                F.lit(f", window_bits {w})"),
+                F.lit(f", window of {n_bits} bits)"),
             )
         ).cast("long")
     )
-    if min_count > 1:
-        v = F.when(F.col("count") >= min_count, v)
     per_bucket = (
-        hcounts.select(
+        rows.select(
             "part_id",
             "sample_id",
             F.bitmap_bucket_number(v).alias("bucket"),
@@ -145,19 +131,36 @@ def bf_slices(hcounts: DataFrame, cfg: KmConfig, min_count: int = 1) -> DataFram
             "part_id",
             "sample_id",
             F.col("n_set").cast("long").alias("n_set"),
-            F.aggregate(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(n_buckets)),
-                    lambda b: F.coalesce(
-                        F.element_at(F.col("__m"), b),
-                        F.lit(bytes(_BITMAP_BUCKET_BITS // 8)),
-                    ),
-                ),
-                F.lit(b"").cast("binary"),
-                lambda acc, x: F.concat(acc, x),
-            ).substr(F.lit(1), F.lit(w // 8)).alias("bitmap"),
+            _ordered_concat(F.col("__m"), range(1, n_buckets + 1), _BITMAP_BUCKET_BITS // 8)
+            .substr(F.lit(1), F.lit(n_bits // 8))
+            .alias("bitmap"),
         )
     )
+
+
+def _local_idx(w: int) -> Column:
+    """Window-local index of a hash_counts row: hash_idx minus its anchor."""
+    return F.col("hash_idx") - F.col("part_id").cast("long") * F.lit(w)
+
+
+def bf_slices(hcounts: DataFrame, cfg: KmConfig, min_count: int = 1) -> DataFrame:
+    """One Bloom window per (partition, sample): (part_id, sample_id,
+    n_set, bitmap). Serves both the bf and the bft modes: the
+    reference's bft transpose (merge.hpp:631-644) yields these same
+    sample-major rows, byte for byte.
+
+    Because hash_counts pre-partitions on (part_id, sample_id), the
+    whole hash_counts -> bf_slices chain is a single shuffle with zero
+    Python.
+
+    min_count > 1 masks sub-threshold rows to NULL instead of filtering
+    them, so a fully-masked (part, sample) group still yields its
+    empty-bitmap row (a pre-filter would drop the group — the contract
+    is one row per group present in hcounts)."""
+    local = _local_idx(cfg.window_bits)
+    if min_count > 1:
+        local = F.when(F.col("count") >= min_count, local)
+    return _window_bitmaps(hcounts, local, cfg.window_bits)
 
 
 def bf_concat(slices: DataFrame, cfg: KmConfig) -> DataFrame:
@@ -166,7 +169,7 @@ def bf_concat(slices: DataFrame, cfg: KmConfig) -> DataFrame:
     (sample_id, total_set, filter binary of window_bytes * P).
     """
     P, w = cfg.nb_partitions, cfg.window_bits
-    # same JVM map-assembly shape as bf_slices (r6): one tiny shuffle of
+    # same JVM map-assembly shape as bf_slices: one tiny shuffle of
     # (sample, part, window) rows, ordered concat with zero windows for
     # absent partitions (merge.hpp:575-600) — no Python boundary
     return (
@@ -180,72 +183,33 @@ def bf_concat(slices: DataFrame, cfg: KmConfig) -> DataFrame:
         .select(
             "sample_id",
             F.col("total_set").cast("long").alias("total_set"),
-            F.aggregate(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(P - 1)),
-                    lambda p: F.coalesce(
-                        F.element_at(F.col("__m"), p), F.lit(bytes(w // 8))
-                    ),
-                ),
-                F.lit(b"").cast("binary"),
-                lambda acc, x: F.concat(acc, x),
-            ).alias("filter"),
+            _ordered_concat(F.col("__m"), range(P), w // 8).alias("filter"),
         )
     )
 
 
-def bft_slices(hcounts: DataFrame, samples: list[str], cfg: KmConfig, min_count: int = 1) -> DataFrame:
-    """Transposed build: per partition, sample-major rows (the reference's
-    bit-matrix transpose, merge.hpp:631-644). Output equals bf_slices
-    row-for-row.
-
-    Memory-bounded: one w/8-byte packed bitmap per sample AT A TIME
-    (peak extra = one window), never the dense (window_bits x n_samples)
-    matrix — at reference-scale settings (w=2^24/P, 10^4 samples) the
-    dense form is multi-GB per task. `samples` fixes row order parity
-    with the reference's matrix column order."""
-    w = cfg.window_bits
-    order = {s: i for i, s in enumerate(samples)}
-
-    def build(key, pdf):
-        part = key[0]
-        sel = pdf[pdf["count"] >= min_count]
-        local = sel["hash_idx"].to_numpy(dtype=np.int64) - np.int64(part) * w
-        rows = []
-        for s, idx in sel.groupby("sample_id", sort=False).indices.items():
-            state = bloom.create(w)
-            bloom.add_local_indices(state, local[idx])
-            rows.append((part, s, bloom.popcount(state), state.tobytes()))
-        rows.sort(key=lambda r: order.get(r[1], len(order)))
-        return pd.DataFrame(rows, columns=["part_id", "sample_id", "n_set", "bitmap"])
-
-    return hcounts.groupBy("part_id").applyInPandas(build, _SLICE_SCHEMA)
-
-
-_BFC_SCHEMA = StructType(
-    [
-        StructField("part_id", IntegerType()),
-        StructField("sample_id", StringType()),
-        StructField("packed", BinaryType()),
-    ]
-)
-
-
 def bfc_slices(hcounts: DataFrame, cfg: KmConfig) -> DataFrame:
-    """Counting-BF window: w-bit cells of ceil(log2(c+1)), capped."""
+    """Counting-BF window per (partition, sample): (part_id, sample_id,
+    packed). Cell i holds min(bit_length(count), 2^width - 1)
+    (packc.hpp:16-43) in window bits [i*width, (i+1)*width), LSB-first —
+    bloom.pack_counts' layout. Built as a bit window of window_bits *
+    width bits by the bf_slices bitmap build: bit j of cell i is window
+    bit i*width + j. Counts are >= 1, as hash_counts leaves them."""
     w, width = cfg.window_bits, cfg.bfc_width
-
-    def build(key, pdf):
-        part, sample = key
-        local = pdf["hash_idx"].to_numpy(dtype=np.int64) - np.int64(part) * w
-        cells = np.zeros(w, dtype=np.int64)
-        np.add.at(cells, local, pdf["count"].to_numpy(dtype=np.int64))
-        packed = bloom.pack_counts(cells, width)
-        return pd.DataFrame(
-            [(part, sample, packed.tobytes())], columns=["part_id", "sample_id", "packed"]
-        )
-
-    return hcounts.groupBy("part_id", "sample_id").applyInPandas(build, _BFC_SCHEMA)
+    if width not in (1, 2, 4, 8):
+        raise ValueError(f"bfc_width must divide 8 (1, 2, 4 or 8), got {width}")
+    cell = F.least(F.length(F.bin(F.col("count"))), F.lit((1 << width) - 1))
+    bits = hcounts.select(
+        "part_id",
+        "sample_id",
+        (_local_idx(w) * F.lit(width)).alias("base"),
+        F.explode(
+            F.filter(F.sequence(F.lit(0), F.lit(width - 1)), lambda j: F.bit_get(cell, j) == 1)
+        ).alias("j"),
+    )
+    return _window_bitmaps(bits, F.col("base") + F.col("j"), w * width).select(
+        "part_id", "sample_id", F.col("bitmap").alias("packed")
+    )
 
 
 def fpr_report(slices: DataFrame, cfg: KmConfig) -> DataFrame:

@@ -21,71 +21,44 @@ from pyspark.sql import functions as F
 
 from kmtricks_spark.config import KmConfig
 from kmtricks_spark.functions.hashing import part_id_col
-from kmtricks_spark.functions.shingles import kgram_partials_arrow, kgrams_sql
-
-
-def resolve_method(cfg: KmConfig) -> str:
-    """'auto' -> the measured-faster JVM path: explode+substring with
-    Tungsten partial agg beats the Arrow pre-count ~1.6x at equal
-    semantics (BENCH r1); bytes mode keeps byte-identical extraction
-    without Python. Shared by count_kgrams and the sampled-repartition
-    pre-pass so both always see the same kgram representation."""
-    if cfg.method == "auto":
-        return "sql" if cfg.kgram_as_string else "sql_bytes"
-    return cfg.method
+from kmtricks_spark.functions.shingles import kgrams_sql
 
 
 def count_kgrams(df: DataFrame, cfg: KmConfig, hot_map: dict | None = None) -> DataFrame:
     """Exact counts: (part_id, sample_id, kgram, count), count >= hard_min.
 
-    method='arrow' pre-counts inside the scan task (super-k-mer-style
-    shuffle compression), 'sql' explodes shingles with Spark's partial
-    aggregation ('auto' resolves to sql/sql_bytes — see resolve_method).
+    Shingles explode in the JVM (kgrams_sql; bytes mode unless
+    kgram_as_string) and Spark's partial aggregation pre-counts them
+    map-side — the super-k-mer shuffle compression of the reference.
 
     Partitioning (R2/R3): part_id is static xxhash64(kgram)%P by default.
     With cfg.repartition_type='sampled' (or an explicit hot_map), the top
     sampled kgrams are routed by an LPT-balanced map (reference default,
     task.hpp:183-199) and only the long tail falls back to static hash —
     the map is broadcast, never a literal plan. Count VALUES are identical
-    either way; only partition placement changes. Sampled routing applies
-    to the sql paths only: the arrow path assigns part_id inside the scan
-    task via minimizers, so asking for both is a config error (raised,
-    not silently ignored).
+    either way; only partition placement changes.
     """
-    method = resolve_method(cfg)
-    if method == "arrow":
-        if hot_map or cfg.repartition_type == "sampled":
-            raise ValueError(
-                "repartition_type='sampled'/hot_map is not applicable to "
-                "method='arrow' (minimizer partitioning happens in-scan); "
-                "use method='sql'/'sql_bytes'"
-            )
-        partials = kgram_partials_arrow(df, cfg)
-        counts = partials.groupBy("part_id", "sample_id", "kgram").agg(
-            F.sum("pcount").alias("count")
-        )
+    from kmtricks_spark.operators.partitioner import (
+        sample_kgram_hot_map,
+        skew_aware_part,
+    )
+
+    shingles = kgrams_sql(df, cfg, bytes_mode=not cfg.kgram_as_string)
+    if cfg.alphabet == "dna":
+        from kmtricks_spark.functions.dna import canonicalize_kgrams
+
+        shingles = canonicalize_kgrams(shingles)
+    counts = shingles.groupBy("sample_id", "kgram").agg(
+        F.count(F.lit(1)).alias("count")
+    )
+    if hot_map is None and cfg.repartition_type == "sampled":
+        hot_map = sample_kgram_hot_map(df, cfg)
+    if hot_map:
+        counts = skew_aware_part(counts, "kgram", cfg.nb_partitions, hot_map=hot_map)
     else:
-        from kmtricks_spark.operators.partitioner import (
-            sample_kgram_hot_map,
-            skew_aware_part,
+        counts = counts.withColumn(
+            "part_id", part_id_col(F.col("kgram"), cfg.nb_partitions)
         )
-
-        shingles = kgrams_sql(df, cfg, bytes_mode=(method == "sql_bytes"))
-        if cfg.alphabet == "dna":
-            from kmtricks_spark.functions.dna import canonicalize_kgrams
-
-            shingles = canonicalize_kgrams(shingles)
-        counts = shingles.groupBy("sample_id", "kgram").agg(
-            F.count(F.lit(1)).alias("count")
-        )
-        if hot_map is None and cfg.repartition_type == "sampled":
-            hot_map = sample_kgram_hot_map(df, cfg)
-        if hot_map:
-            counts = skew_aware_part(counts, "kgram", cfg.nb_partitions, hot_map=hot_map)
-        else:
-            counts = counts.withColumn(
-                "part_id", part_id_col(F.col("kgram"), cfg.nb_partitions)
-            )
     counts = counts.where(F.col("count") >= cfg.hard_min)
     if cfg.max_count:
         counts = counts.withColumn(

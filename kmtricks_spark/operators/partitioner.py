@@ -130,12 +130,9 @@ def sample_kgram_hot_map(
     representation exactly — bytes mode and DNA canonicalization included
     — or the map keys could never match the keys being routed."""
     from kmtricks_spark.functions.shingles import kgrams_sql
-    from kmtricks_spark.operators.count import resolve_method
 
     sh = kgrams_sql(
-        df.sample(fraction=fraction, seed=42),
-        cfg,
-        bytes_mode=(resolve_method(cfg) == "sql_bytes"),
+        df.sample(fraction=fraction, seed=42), cfg, bytes_mode=not cfg.kgram_as_string
     )
     if cfg.alphabet == "dna":
         from kmtricks_spark.functions.dna import canonicalize_kgrams

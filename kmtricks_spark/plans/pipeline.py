@@ -228,11 +228,7 @@ class Pipeline:
             counts = self._restrict(read_stage(self.spark, self.run_dir, "counts"))
             hc = hash_counts(counts, self.cfg)
             mode = self.cfg.bloom_mode
-            if mode == "bft":
-                from kmtricks_spark.operators.bloom_stage import bft_slices
-
-                slices = bft_slices(hc, self._samples(counts), self.cfg)
-            elif mode == "bfc":
+            if mode == "bfc":
                 from kmtricks_spark.operators.bloom_stage import bfc_slices
 
                 write_stage(
@@ -241,11 +237,10 @@ class Pipeline:
                 )
                 self._finish("bloom", read_stage(self.spark, self.run_dir, "bloom"))
                 return
-            elif mode == "bf":
-                slices = bf_slices(hc, self.cfg)
-            else:
+            if mode not in ("bf", "bft"):
                 raise ValueError(f"bloom_mode must be bf|bft|bfc, got {mode!r}")
-            # bf and bft share the slice schema: concat + fpr apply to both
+            # bft's transposed rows equal bf's slices byte for byte
+            slices = bf_slices(hc, self.cfg)
             write_stage(slices, self.run_dir, "bloom", partition_by=["part_id"])
             slices_r = read_stage(self.spark, self.run_dir, "bloom")
             write_stage(bf_concat(slices_r, self.cfg), self.run_dir, "bloom_filters")

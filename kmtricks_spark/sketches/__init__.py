@@ -13,6 +13,10 @@ Spark integration (spark.py) follows the partial -> merge -> final shape:
 mapInPandas computes per-batch partials (no shuffle of raw rows beyond
 the grouping), groupBy().applyInPandas merges payloads. Associativity
 under shuffle-order randomization is covered by tests for every sketch.
+
+``bloom`` is the exception: it holds the numpy layout kernels that the
+JVM Bloom builds in operators/bloom_stage.py must reproduce, plus the
+probe-side bit check.
 """
 
 from kmtricks_spark.sketches import bloom, cms, hll, kll, tdigest  # noqa: F401

@@ -1,4 +1,4 @@
-"""Window-anchored partitioned Bloom filters (+ bft / bfc variants).
+"""Window-anchored partitioned Bloom filters: numpy reference kernels.
 
 The reference's key design trick (hash.hpp:31-80, kmer_hash.hpp:244-261):
 the global filter of B bits is split into P contiguous windows of
@@ -7,14 +7,14 @@ w = round_up(ceil(B/P), 64) bits; a key in partition p sets bit
 independently and the global per-sample filter is the ordered
 concatenation of its P slices — no re-hashing, merge = bytewise OR.
 
-Variants, matching kmtricks' output modes (cli.cpp:150-199):
-* bf  — one slice per (sample, partition): rows = hash values (A9,
-        count_processor.hpp:84-120).
-* bft — transposed: per-partition bit-matrix (hash x sample) flipped to
-        one row per sample (merge.hpp:631-644, bitmatrix.hpp:209-242,
-        here a numpy unpackbits/packbits transpose).
+The Spark builds in operators/bloom_stage.py run in the JVM; these
+kernels define the layouts they must reproduce byte for byte, and serve
+the membership probes (bf_probe's bit check):
+* bf / bft — one BITSET slice per (sample, partition), LSB-first per
+        byte (A9, count_processor.hpp:84-120); the bft transpose
+        (merge.hpp:631-644) yields the same sample-major rows.
 * bfc — counting: w-bit cells holding ceil(log2(c+1)) capped at 2^w-1
-        (packc.hpp:16-43).
+        (packc.hpp:16-43), pack_counts / unpack_counts.
 
 FPR model: fpr = (1 - e^{-kn/m})^k with k=1 hash (utils.hpp:239-243).
 """
@@ -24,8 +24,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-
-MAGIC = b"BFS1"
 
 
 def create(window_bits: int) -> np.ndarray:
@@ -55,29 +53,6 @@ def contains_local(state: np.ndarray, idx: np.ndarray) -> np.ndarray:
     byte = (idx >> 3).astype(np.int64)
     bit = (np.uint8(1) << (idx & 7).astype(np.uint8)).astype(np.uint8)
     return (state[byte] & bit) != 0
-
-
-def merge(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    if a.size != b.size:
-        raise ValueError("BF window mismatch")
-    return np.bitwise_or(a, b)
-
-
-def concat_slices(slices: dict[int, bytes], nb_partitions: int, window_bits: int) -> bytes:
-    """Global per-sample filter = slices ordered by part_id; missing
-    partitions are zero windows (the reference writes explicit zero rows,
-    merge.hpp:575-600)."""
-    w_bytes = window_bits // 8
-    empty = bytes(w_bytes)
-    return b"".join(slices.get(p, empty) for p in range(nb_partitions))
-
-
-def transpose_bits(matrix: np.ndarray) -> np.ndarray:
-    """bft: (n_rows, n_cols) bit matrix as uint8 0/1 -> packed per-column
-    rows. Input = presence matrix of one partition (rows: hash values,
-    cols: samples); output row j = sample j's slice bits, packed."""
-    cols = matrix.T.astype(np.uint8)
-    return np.packbits(cols, axis=1, bitorder="little")
 
 
 def pack_counts(counts: np.ndarray, width: int) -> np.ndarray:
@@ -115,12 +90,3 @@ def unpack_counts(packed: np.ndarray, width: int, n: int) -> np.ndarray:
 def fpr(m_bits: int, n_items: int, k_hashes: int = 1) -> float:
     """(1 - e^{-kn/m})^k — utils.hpp:239-243."""
     return (1.0 - math.exp(-(k_hashes * n_items) / m_bits)) ** k_hashes
-
-
-def serialize(state: np.ndarray) -> bytes:
-    return MAGIC + state.tobytes()
-
-
-def deserialize(buf: bytes) -> np.ndarray:
-    assert buf[:4] == MAGIC, "bad BF payload"
-    return np.frombuffer(buf[4:], dtype=np.uint8).copy()

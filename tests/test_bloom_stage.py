@@ -1,20 +1,22 @@
 """Bloom stage end-to-end: membership of all counted kgrams, measured FPR
-vs the analytic bound (utils.hpp:239-243), bf == bft equivalence."""
+vs the analytic bound (utils.hpp:239-243), bf == bft equivalence, bfc
+cells against the packc kernel, and pure-JVM plans."""
+
+import os
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from kmtricks_spark import KmConfig
 from kmtricks_spark.operators.bloom_stage import (
     bf_concat,
     bf_slices,
     bfc_slices,
-    bft_slices,
     fpr_report,
     hash_counts,
 )
 from kmtricks_spark.operators.count import count_kgrams
+from kmtricks_spark.plans.pipeline import Pipeline
 from kmtricks_spark.sketches import bloom
 
 CFG = KmConfig(k=8, hard_min=1, nb_partitions=8, bloom_bits=1 << 20)
@@ -59,24 +61,66 @@ def test_fpr_report_matches_model(hc):
     assert abs(rep["fpr"] - expect) < 1e-6
 
 
-def test_bft_equals_bf(spark, counts, hc):
-    samples = sorted(r.sample_id for r in counts.select("sample_id").distinct().collect())
-    a = {(r.part_id, r.sample_id): bytes(r.bitmap) for r in bf_slices(hc, CFG).collect()}
-    b = {(r.part_id, r.sample_id): bytes(r.bitmap) for r in bft_slices(hc, samples, CFG).collect()}
-    assert a == b
+def test_bft_equals_bf(spark, sf_dir, tmp_path):
+    """The bft pipeline mode writes the same slices and per-sample
+    filters as bf, byte for byte."""
+    inp = os.path.join(sf_dir, "documents.parquet")
+    out = {}
+    for mode in ("bf", "bft"):
+        p = Pipeline(spark, CFG.with_(bloom_mode=mode), str(tmp_path / mode), inp)
+        p.stage_counts()
+        p.stage_bloom()
+        out[mode] = {
+            t: sorted(tuple(r) for r in spark.read.parquet(os.path.join(p.run_dir, t)).collect())
+            for t in ("bloom", "bloom_filters")
+        }
+    assert out["bf"]["bloom"] and out["bf"] == out["bft"]
 
 
-def test_bfc_cells(spark, hc):
-    row = bfc_slices(hc, CFG).first()
-    packed = np.frombuffer(bytes(row["packed"]), dtype=np.uint8)
-    cells = bloom.unpack_counts(packed, CFG.bfc_width, CFG.window_bits)
-    sel = hc.where(
-        (F.col("part_id") == row["part_id"]) & (F.col("sample_id") == row["sample_id"])
-    ).toPandas()
-    local = sel["hash_idx"].to_numpy(dtype=np.int64) - row["part_id"] * CFG.window_bits
-    agg = np.zeros(CFG.window_bits, dtype=np.int64)
-    np.add.at(agg, local, sel["count"].to_numpy(dtype=np.int64))
-    expect = np.minimum(
-        np.ceil(np.log2(agg + 1)).astype(np.int64), (1 << CFG.bfc_width) - 1
-    )
-    assert np.array_equal(cells.astype(np.int64), expect)
+def test_bfc_cells(spark, counts):
+    """bfc windows are byte-identical to bloom.pack_counts over the
+    summed cell counts, at every cell width, including a window that is
+    not a multiple of the 32768-bit bitmap bucket."""
+    odd = CFG.with_(bloom_bits=165_000)
+    assert odd.window_bits % 32768 != 0
+    for cfg0 in (CFG, odd):
+        w = cfg0.window_bits
+        hc0 = hash_counts(counts, cfg0)
+        hcp = hc0.toPandas()
+        for width in (1, 2, 4, 8):
+            rows = bfc_slices(hc0, cfg0.with_(bfc_width=width)).collect()
+            assert len(rows) == len(hcp.groupby(["part_id", "sample_id"]))
+            for r in rows:
+                sel = hcp[(hcp["part_id"] == r.part_id) & (hcp["sample_id"] == r.sample_id)]
+                cells = np.zeros(w, dtype=np.int64)
+                np.add.at(
+                    cells,
+                    sel["hash_idx"].to_numpy(dtype=np.int64) - r.part_id * w,
+                    sel["count"].to_numpy(dtype=np.int64),
+                )
+                assert bytes(r.packed) == bloom.pack_counts(cells, width).tobytes()
+
+
+def test_bfc_slices_rejects_width_not_dividing_8(hc):
+    with pytest.raises(ValueError, match="bfc_width"):
+        bfc_slices(hc, CFG.with_(bfc_width=3))
+
+
+def test_bloom_and_count_plans_have_no_python_nodes(spark, docs, hc):
+    """The count -> Bloom chain runs in the JVM end to end: no Arrow or
+    pandas boundary in any executed plan (bf_probe's cogroup is the one
+    Python step of the Bloom family). Nor does any plan carry a zero
+    window or bucket as a binary literal."""
+    slices = bf_slices(hc, CFG)
+    frames = [
+        count_kgrams(docs, CFG),
+        count_kgrams(docs, CFG.with_(kgram_as_string=False)),
+        slices,
+        bfc_slices(hc, CFG),
+        bf_concat(slices, CFG),
+    ]
+    for df in frames:
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InPandas" not in plan and "EvalPython" not in plan, plan
+        assert "0x" + "00" * 64 not in plan

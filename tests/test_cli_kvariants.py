@@ -37,17 +37,6 @@ def test_count_parity_other_k(spark, sf_dir, k):
     assert sp.equals(oc[sp.columns])
 
 
-def test_arrow_void_path_k16(spark, sf_dir):
-    cfg = KmConfig(k=16, hard_min=2)
-    a = count_kgrams(
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet")), cfg.with_(method="arrow")
-    ).select("sample_id", "kgram", "count")
-    b = count_kgrams(
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet")), cfg.with_(method="sql")
-    ).select("sample_id", "kgram", "count")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_cli_pipeline_and_dump(tmp_path, sf_dir):
     rd = str(tmp_path / "clirun")
     env = {**os.environ, "SPARK_GRAFT_CPUS": "8"}

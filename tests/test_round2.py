@@ -230,11 +230,6 @@ def test_partitioner_bytes_keys_roundtrip(tmp_path):
     assert load_partitioner(p, 8, 4, 8) == hm
 
 
-def test_arrow_sampled_raises(spark, zipf_docs):
-    with pytest.raises(ValueError, match="arrow"):
-        count_kgrams(zipf_docs, CFG.with_(method="arrow", repartition_type="sampled"))
-
-
 def test_frame_sample_zero_duration(spark):
     from kmtricks_spark.operators.multimodal import MEDIA_SCHEMA, frame_sample
 

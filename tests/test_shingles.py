@@ -1,5 +1,5 @@
-"""Shingling goldens: exact k-gram multisets, byte-identical extraction,
-arrow-vs-sql path equivalence (≙ reference kmer_test.cpp round-trips and
+"""Shingling goldens: exact k-gram multisets, byte-identical extraction
+on multibyte UTF-8 (≙ reference kmer_test.cpp round-trips and
 task_main.cpp golden counts)."""
 
 from collections import Counter
@@ -7,7 +7,7 @@ from collections import Counter
 import pytest
 
 from kmtricks_spark import KmConfig
-from kmtricks_spark.functions.shingles import kgram_partials_arrow, kgrams_sql
+from kmtricks_spark.functions.shingles import kgrams_sql
 from kmtricks_spark.operators.count import count_kgrams
 
 
@@ -16,61 +16,47 @@ def py_kgrams(text: str, k: int) -> Counter:
     return Counter(b[i : i + k] for i in range(len(b) - k + 1))
 
 
+TINY = [
+    ("s1", "abcabcab"),
+    ("s1", "zz"),  # shorter than k -> no shingles at k=4
+    ("s2", "abcd abcd"),
+    ("s2", "café café x"),  # multibyte UTF-8 boundary coverage
+]
+
+
 @pytest.fixture(scope="module")
 def tiny(spark):
-    rows = [
-        ("s1", "abcabcab"),
-        ("s1", "zz"),  # shorter than k -> no shingles at k=4
-        ("s2", "abcd abcd"),
-        ("s2", "café café x"),  # multibyte UTF-8 boundary coverage
-    ]
-    return spark.createDataFrame(rows, ["source", "text"])
+    return spark.createDataFrame(TINY, ["source", "text"])
 
 
-def test_golden_byte_kgrams_arrow(spark, tiny):
-    cfg = KmConfig(k=4, hard_min=1, kgram_as_string=False)
-    got = kgram_partials_arrow(tiny, cfg).toPandas()
-    agg = {}
-    for r in got.itertuples():
-        key = (r.sample_id, bytes(r.kgram))
-        agg[key] = agg.get(key, 0) + r.pcount
-    expected = {}
-    for s, t in [("s1", "abcabcab"), ("s1", "zz"), ("s2", "abcd abcd"), ("s2", "café café x")]:
-        for g, c in py_kgrams(t, 4).items():
-            expected[(s, g)] = expected.get((s, g), 0) + c
-    assert agg == expected
+def expected_kgrams(k: int) -> Counter:
+    out = Counter()
+    for s, t in TINY:
+        out.update({(s, g): c for g, c in py_kgrams(t, k).items()})
+    return out
 
 
-def test_arrow_equals_sql_on_ascii(docs):
-    cfg = KmConfig(k=8, hard_min=1)
-    a = count_kgrams(docs, cfg).select("sample_id", "kgram", "count")
-    b = count_kgrams(docs, cfg.with_(method="sql")).select("sample_id", "kgram", "count")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+def test_golden_byte_kgrams_sql_bytes(spark, tiny):
+    cfg = KmConfig(k=4, kgram_as_string=False)
+    got = Counter(
+        (r.sample_id, bytes(r.kgram)) for r in kgrams_sql(tiny, cfg, bytes_mode=True).collect()
+    )
+    assert got == expected_kgrams(4)
 
 
 def test_shingle_count_identity(spark, tiny):
-    # sum of counts == total windows
-    cfg = KmConfig(k=4, hard_min=1, kgram_as_string=False)
-    total = (
-        kgram_partials_arrow(tiny, cfg).groupBy().sum("pcount").collect()[0][0]
-    )
-    exp = sum(
-        max(len(t.encode("utf-8")) - 3, 0)
-        for t in ["abcabcab", "zz", "abcd abcd", "café café x"]
-    )
-    assert total == exp
+    # number of byte shingles == total windows
+    cfg = KmConfig(k=4, kgram_as_string=False)
+    exp = sum(max(len(t.encode("utf-8")) - 3, 0) for _, t in TINY)
+    assert kgrams_sql(tiny, cfg, bytes_mode=True).count() == exp
 
 
-def test_sql_bytes_equals_arrow_on_utf8(spark, tiny):
-    # byte semantics must agree between the JVM binary-substring path and
-    # the numpy byte-window path, including multibyte boundaries
+def test_count_kgrams_bytes_on_utf8(spark, tiny):
+    # kgram_as_string=False counts byte shingles, multibyte boundaries
+    # included
     cfg = KmConfig(k=4, hard_min=1, kgram_as_string=False)
-    a = count_kgrams(tiny, cfg.with_(method="arrow"))
-    b = count_kgrams(tiny, cfg.with_(method="sql_bytes"))
-    pa = {(r.sample_id, bytes(r.kgram)): r["count"] for r in a.collect()}
-    pb = {(r.sample_id, bytes(r.kgram)): r["count"] for r in b.collect()}
-    assert pa == pb
+    got = {(r.sample_id, bytes(r.kgram)): r["count"] for r in count_kgrams(tiny, cfg).collect()}
+    assert got == dict(expected_kgrams(4))
 
 
 def test_sql_path_rowcount(spark, tiny):
@@ -92,7 +78,7 @@ def test_sql_char_ascii_fastpath_equals_char_semantics(spark):
         ("s4", "ascii only text here!"),  # fast-path branch
     ]
     df = spark.createDataFrame(rows, ["source", "text"])
-    cfg = KmConfig(k=4, kgram_as_string=True, method="sql")
+    cfg = KmConfig(k=4, kgram_as_string=True)
     got = Counter(
         (r["sample_id"], r["kgram"])
         for r in kgrams_sql(df, cfg).collect()

@@ -172,19 +172,6 @@ def test_bloom_membership_and_fpr():
     assert measured <= bound * 1.3 + 0.005
 
 
-def test_bloom_merge_or_and_concat():
-    w = 256
-    a = bloom.add_local_indices(bloom.create(w), np.array([0, 5]))
-    b = bloom.add_local_indices(bloom.create(w), np.array([5, 250]))
-    m = bloom.merge(a, b)
-    assert bloom.contains_local(m, np.array([0, 5, 250])).all()
-    blob = bloom.concat_slices({0: a.tobytes(), 2: b.tobytes()}, 3, w)
-    assert len(blob) == 3 * w // 8
-    g = np.frombuffer(blob, dtype=np.uint8)
-    assert bloom.contains_local(g, np.array([0, 5, 2 * w + 250])).all()
-    assert not bloom.contains_local(g, np.array([w + 5]))[0]  # missing partition = zeros
-
-
 def test_bfc_pack_roundtrip_and_lognb():
     # to_n_b golden cases (packc_test.cpp style): c=0->0, 1->1, 2..3->2, 4..7->3, cap
     counts = np.array([0, 1, 2, 3, 4, 7, 8, 1000], dtype=np.int64)
@@ -194,12 +181,3 @@ def test_bfc_pack_roundtrip_and_lognb():
     packed4 = bloom.pack_counts(counts, 4)
     cells4 = bloom.unpack_counts(packed4, 4, counts.size)
     assert list(cells4) == [0, 1, 2, 2, 3, 3, 4, 10]
-
-
-def test_bit_transpose():
-    mat = (RNG.random((64, 9)) < 0.3).astype(np.uint8)
-    packed = bloom.transpose_bits(mat)
-    assert packed.shape == (9, 8)
-    for j in range(9):
-        bits = np.unpackbits(packed[j], bitorder="little")[:64]
-        assert np.array_equal(bits, mat[:, j])
