@@ -322,18 +322,18 @@ def _q_revenue_by_nation(spark, sf_dir):
 def _q_hll_per_sample(spark, sf_dir):
     counts = count_kgrams(_docs(spark, sf_dir), CFG.with_(hard_min=1))
     hashed = counts.select("sample_id", F.xxhash64("kgram").alias("h"))
-    # 20 groups over the whole corpus -> the two-level salted merge is
-    # the scale path (bounded fan-in per reducer); result byte-identical
-    agg = sketch_agg(hashed, ["sample_id"], "h", "hll", salt_buckets=16, p=14)
+    # JVM register max per (sample, register), estimated in SQL
+    agg = sketch_agg(hashed, ["sample_id"], "h", "hll", p=14)
     return agg.select("sample_id", F.round(hll_estimate_col(), 2).alias("est_distinct"))
 
 
 def _q_kll_count_dist(spark, sf_dir):
     """North rule: count-distribution quantiles (how often do shingles of
-    each sample repeat) via KLL over the exact count column. k=32768 >=
-    any sf0.01 group, so the sketch never compacts there and the values
-    are exact order statistics — hash-matched against the SQL oracle.
-    Binary-exact q fractions keep ceil(q*n) identical in both engines."""
+    each sample repeat) via Spark's native KLL over the exact count
+    column. k=32768 >= any sf0.01 group, so the sketch never compacts
+    there and the values are exact order statistics — hash-matched
+    against the SQL oracle. Binary-exact q fractions keep ceil(q*n)
+    identical in both engines."""
     counts = count_kgrams(_docs(spark, sf_dir), CFG.with_(hard_min=1))
     agg = sketch_agg(
         counts.select("sample_id", F.col("count").cast("double").alias("c")),
@@ -343,6 +343,8 @@ def _q_kll_count_dist(spark, sf_dir):
 
 
 def _q_kll_quantiles(spark, sf_dir):
+    """Native KLL quantiles of l_extendedprice per return flag; k=32768
+    >= n, so they are exact order statistics."""
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     agg = sketch_agg(
         li.select("l_returnflag", "l_extendedprice"),
@@ -352,8 +354,8 @@ def _q_kll_quantiles(spark, sf_dir):
 
 
 def _q_kll_rank(spark, sf_dir):
-    """Inverse quantile (rank) through the KLL path, exact at oracle
-    scale (k >= n, see _q_kll_quantiles) — hash-matched against
+    """Inverse quantile (rank) through the native KLL sketch, exact at
+    oracle scale (k >= n, see _q_kll_quantiles) — hash-matched against
     count(x <= probe)/n."""
     from kmtricks_spark.sketches.spark import kll_rank_rows
 
@@ -366,9 +368,12 @@ def _q_kll_rank(spark, sf_dir):
 
 
 def _q_tdigest_quantiles(spark, sf_dir):
+    """Median and p99 of event values per event type. The name is kept
+    for the query list; the sketch is Spark's native KLL (k=200), which
+    compacts at random once a group exceeds k, so rows-only."""
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    agg = sketch_agg(ev.select("event_type", "value"), ["event_type"], "value", "tdigest", delta=200)
-    return quantile_rows(agg, ["event_type"], [0.5, 0.99], "tdigest")
+    agg = sketch_agg(ev.select("event_type", "value"), ["event_type"], "value", "kll", k=200)
+    return quantile_rows(agg, ["event_type"], [0.5, 0.99], "kll")
 
 
 def _q_bf_fpr(spark, sf_dir):
@@ -623,13 +628,13 @@ def _q_domain_cap(spark, sf_dir):
 def _q_hll_union_bounds(spark, sf_dir):
     """HLL estimate vs SQL-exact distinct, pinned INSIDE the driver
     window as booleans: per sample, |est - exact| / exact must sit
-    within the 3-sigma bound 3*1.04/sqrt(2^14). The estimate rides the
-    salted two-level merge (16-way partial-sketch union), so the merge
-    path itself is what the boolean pins; the oracle states exact
-    distinct counts and within_bounds = true for every sample."""
+    within the 3-sigma bound 3*1.04/sqrt(2^14). The estimate is the JVM
+    register max (partial then final aggregate) read by the SQL
+    estimator, so that path is what the boolean pins; the oracle states
+    exact distinct counts and within_bounds = true for every sample."""
     counts = count_kgrams(_docs(spark, sf_dir), CFG.with_(hard_min=1))
     hashed = counts.select("sample_id", F.xxhash64("kgram").alias("h"))
-    agg = sketch_agg(hashed, ["sample_id"], "h", "hll", salt_buckets=16, p=14)
+    agg = sketch_agg(hashed, ["sample_id"], "h", "hll", p=14)
     est = agg.select("sample_id", hll_estimate_col().alias("est"))
     exact = counts.groupBy("sample_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("exact_distinct")
@@ -647,7 +652,7 @@ def _q_dup_cluster_assign(spark, sf_dir):
     """Near-dup clustering (connected components over dup pairs),
     hash-matched: exact-duplicate edges from md5-fingerprint equality
     (incl. 3-cliques from a second planted copy, so transitive closure
-    is exercised), min-label propagation assigns cluster_id = min
+    is exercised), star contraction assigns cluster_id = min
     reachable id. Oracle: fp groups ARE the components of this graph."""
     from kmtricks_spark.operators.dedup import dup_clusters
 
@@ -684,7 +689,7 @@ def _q_dup_cluster_star(spark, sf_dir):
         .where(F.col("prev").isNotNull())
         .select(F.col("prev").alias("a"), F.col("doc_id").alias("b"))
     )
-    return dup_clusters(pairs, max_iter=25, algorithm="star")
+    return dup_clusters(pairs, max_iter=25)
 
 
 def _q_dup_span_stats(spark, sf_dir):
@@ -801,11 +806,11 @@ def _md5_hash64_col(col: str) -> "F.Column":
 
 def _q_cms_word_freq(spark, sf_dir):
     """Count-min heavy-hitter estimates for the corpus vocabulary, HASH-
-    MATCHED: the CMS is built distributed (partial -> salted merge ->
-    payload) over md5-derived 64-bit hashes, then the top-20 words are
-    probed. Because CMS cells are exact sums and the Kirsch-Mitzenmacher
-    row indices h1 + i*(splitmix64(h1)|1) mod w are pure integer
-    arithmetic, the oracle recomputes every estimate in SQL (splitmix64
+    MATCHED: the CMS is built distributed (per-batch cells -> JVM cell
+    sum -> payload) over md5-derived 64-bit hashes, then the top-20
+    words are probed. Because CMS cells are exact sums and the
+    Kirsch-Mitzenmacher row indices h1 + i*(splitmix64(h1)|1) mod w are
+    pure integer arithmetic, the oracle recomputes every estimate in SQL (splitmix64
     via 32-bit split modular multiplies). Bound property (est >= exact,
     est - exact <= eps*N) stays pinned in tests; THIS query pins the
     distributed build bit-for-bit."""
@@ -819,10 +824,10 @@ def _q_cms_word_freq(spark, sf_dir):
         F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("tok")
     )
     hashed = toks.select(F.lit("all").alias("g"), _md5_hash64_col("tok").alias("h"))
-    # ONE global group: without the salted level every partial would
-    # funnel through a single reducer at corpus scale
+    # ONE global group: the cells are summed map-side, then per (g, cell),
+    # so the packing task receives at most depth*width rows
     payload = bytes(
-        sketch_agg(hashed, ["g"], "h", "cms", salt_buckets=16, width=2719, depth=5)
+        sketch_agg(hashed, ["g"], "h", "cms", width=2719, depth=5)
         .collect()[0]["payload"]
     )
     top = (
@@ -1023,7 +1028,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 # CMS oracle: the sketch's Kirsch-Mitzenmacher row indices are pure
-# uint64 arithmetic over the md5-derived base hash (sketches/cms.py:31-37
+# uint64 arithmetic over the md5-derived base hash (sketches/cms.py::flat_cells
 # + functions/hashing.py splitmix64), so DuckDB recomputes every cell and
 # estimate exactly. uint64 wraparound multiplies are done as 32-bit split
 # modular products ((a_lo*b + ((a_hi*b) mod 2^32)*2^32) mod 2^64) because

@@ -112,9 +112,9 @@ def bench_queries(spark) -> dict[str, float]:
 
     # warmup: exercise codegen/JIT + python workers once, off the clock
     run_count(spark, 2)
-    sketch_agg(
+    sketch_agg(  # cms still runs Python UDFs, so this starts the workers
         spark.range(1000).select(F.lit("w").alias("g"), F.xxhash64("id").alias("h")),
-        ["g"], "h", "hll", p=10,
+        ["g"], "h", "cms", width=64, depth=2,
     ).collect()
 
     out["count_pipeline"] = _timed(

@@ -165,12 +165,6 @@ def main(argv=None):
                      help="comma-separated lang_guess codes to keep")
     cur.add_argument("--dedup", choices=["none", "exact", "minhash"], default="exact")
     cur.add_argument("--min-jaccard", type=float, default=0.8)
-    cur.add_argument("--cluster-algorithm", choices=["propagate", "star"],
-                     default="star",
-                     help="near-dup connected components: large-star/"
-                          "small-star (default — O(log n) rounds on any "
-                          "graph shape) or min-label propagation "
-                          "(known-shallow clusters)")
     cur.add_argument("--max-dup-coverage", type=float, default=None,
                      help="drop survivors whose duplicated-substring "
                           "coverage exceeds this fraction (span screen)")
@@ -258,7 +252,6 @@ def main(argv=None):
                     langs=args.langs.split(",") if args.langs else None,
                     dedup=(None if args.dedup == "none" else args.dedup),
                     min_jaccard=args.min_jaccard,
-                    cluster_algorithm=args.cluster_algorithm,
                     decontaminate_path=args.decontaminate,
                     contamination_n=args.contamination_n,
                     max_dup_coverage=args.max_dup_coverage,
@@ -281,7 +274,6 @@ def main(argv=None):
                 langs=args.langs.split(",") if args.langs else None,
                 dedup=(None if args.dedup == "none" else args.dedup),
                 min_jaccard=args.min_jaccard,
-                cluster_algorithm=args.cluster_algorithm,
                 decontaminate=(
                     spark.read.parquet(args.decontaminate)
                     if args.decontaminate else None

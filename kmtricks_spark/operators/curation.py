@@ -5,7 +5,7 @@ The composition a training-data pipeline actually runs over raw pages
 stage is one of this repo's oracled operators, chained as DataFrame
 transformations so Catalyst fuses the scalar filters into the scan and
 the only shuffles are the ones dedup inherently needs (md5 groupBy, or
-the LSH band join + cluster propagation for near-dup mode).
+the LSH band join + star-contraction clustering for near-dup mode).
 
 Two entry points share the same gate bodies:
 * `curate(df, ...)` — in-session funnel: localCheckpoint per relational
@@ -121,7 +121,7 @@ def _domain_gate(
 
 def _dedup_gate(
     kept: DataFrame, dedup: str, min_jaccard: float,
-    text_col: str, id_col: str, cluster_algorithm: str,
+    text_col: str, id_col: str,
 ) -> DataFrame:
     if dedup == "exact":
         from kmtricks_spark.operators.dedup import exact_dedup
@@ -145,15 +145,13 @@ def _dedup_gate(
         )
         sigs = minhash_signatures(src, id_col=id_col, text_col=text_col)
         pairs = minhash_lsh_pairs(sigs, min_jaccard=min_jaccard)
-        return dedup_keep_set(
-            kept, pairs.select("a", "b"), id_col=id_col, algorithm=cluster_algorithm
-        )
+        return dedup_keep_set(kept, pairs.select("a", "b"), id_col=id_col)
     raise ValueError(f"dedup must be None|exact|minhash, got {dedup!r}")
 
 
 def _semantic_gate(
     kept: DataFrame, semantic: float, vec_col: str, id_col: str,
-    cluster_algorithm: str, survivors: int, n_lists: int | None,
+    survivors: int, n_lists: int | None,
 ) -> DataFrame:
     # SemDeDup gate over an embedding column riding on the corpus rows:
     # IVF-clustered within-cluster cosine pruning, no all-pairs.
@@ -182,7 +180,6 @@ def _semantic_gate(
         n_lists=max(1, min(cap, int(survivors), IVF_MAX_TRAIN_ROWS)),
         vec_col=vec_col,
         id_col=id_col,
-        cluster_algorithm=cluster_algorithm,
     )
 
 
@@ -265,7 +262,6 @@ def curate(
     min_jaccard: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    cluster_algorithm: str = "star",
     decontaminate: DataFrame | None = None,
     contamination_n: int = 8,
     max_dup_coverage: float | None = None,
@@ -281,11 +277,8 @@ def curate(
     """Apply the curation funnel; returns (survivors, report).
 
     dedup: None | 'exact' (md5 keep-min) | 'minhash' (LSH candidate
-    pairs -> connected-component clusters -> keep cluster minima;
-    cluster_algorithm defaults to 'star' — large-star/small-star is
-    round-bound on ANY duplicate-graph shape at the same per-round cost,
-    so it is the safe default when cluster diameter is unknown;
-    'propagate' remains available for known-shallow graphs).
+    pairs -> large-star/small-star connected components, round-bound
+    on ANY duplicate-graph shape -> keep cluster minima).
     decontaminate: optional benchmark DataFrame (text_col; bench_id
     synthesized if absent) — survivors sharing any contamination_n-gram
     with it are dropped (test-set hygiene gate, reported as
@@ -337,15 +330,14 @@ def curate(
 
     if dedup is not None:
         kept = _dedup_gate(
-            kept, dedup, min_jaccard, text_col, id_col, cluster_algorithm
+            kept, dedup, min_jaccard, text_col, id_col
         ).localCheckpoint()
         report["after_dedup"] = kept.count()
 
     if semantic is not None:
         survivors = report[list(report)[-1]]
         kept = _semantic_gate(
-            kept, semantic, vec_col, id_col, cluster_algorithm, survivors,
-            semantic_n_lists,
+            kept, semantic, vec_col, id_col, survivors, semantic_n_lists,
         ).localCheckpoint()
         report["after_semantic"] = kept.count()
 
@@ -385,7 +377,6 @@ def curate_run(
     min_jaccard: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    cluster_algorithm: str = "star",
     decontaminate_path: str | None = None,
     contamination_n: int = 8,
     max_dup_coverage: float | None = None,
@@ -435,10 +426,8 @@ def curate_run(
     stage_params = {
         "scalar": {"min_quality": min_quality, "gopher": gopher, "langs": langs},
         "domain": {"max_docs_per_domain": max_docs_per_domain, "url_col": url_col},
-        "dedup": {"dedup": dedup, "min_jaccard": min_jaccard,
-                  "cluster_algorithm": cluster_algorithm},
+        "dedup": {"dedup": dedup, "min_jaccard": min_jaccard},
         "semantic": {"semantic": semantic, "vec_col": vec_col,
-                     "cluster_algorithm": cluster_algorithm,
                      "semantic_n_lists": semantic_n_lists},
         "span": {"max_dup_coverage": max_dup_coverage, "span": span,
                  "stride": stride, "span_action": span_action},
@@ -530,9 +519,7 @@ def curate_run(
         elif stage == "dedup":
             if "input" not in report:
                 report["input"] = kept.count()
-            out = _dedup_gate(
-                kept, dedup, min_jaccard, text_col, id_col, cluster_algorithm
-            )
+            out = _dedup_gate(kept, dedup, min_jaccard, text_col, id_col)
             kept = finish(stage, out, {"input": report["input"]})
             report["after_dedup"] = read_lineage(run_dir, stage)["output_rows"]
         elif stage == "semantic":
@@ -540,8 +527,7 @@ def curate_run(
                 report["input"] = kept.count()
             survivors = report[list(report)[-1]]
             out = _semantic_gate(
-                kept, semantic, vec_col, id_col, cluster_algorithm, survivors,
-                semantic_n_lists,
+                kept, semantic, vec_col, id_col, survivors, semantic_n_lists,
             )
             kept = finish(stage, out, {"input": report["input"]})
             report["after_semantic"] = read_lineage(run_dir, stage)["output_rows"]

@@ -428,108 +428,32 @@ def ngram_jaccard_pairs(
 
 # ------------------------------------------------- duplicate clustering
 
-def dup_clusters(
-    pairs: DataFrame, max_iter: int = 20, algorithm: str = "propagate"
-) -> DataFrame:
+def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components over duplicate pairs -> (id, cluster_id),
     cluster_id = the minimum id reachable from `id`. The missing last
     step of every near-dup pipeline: LSH/SimHash/ANN emit PAIRS, but the
     keep/drop decision needs CLUSTERS (a-b + b-c must drop two of
-    {a,b,c}, not one).
+    {a,b,c}, not one). Only ids that appear in some pair are returned
+    (singletons are their own cluster by definition and never shuffle).
 
-    Algorithm: iterative min-label propagation over the symmetrized edge
-    set — each round every node takes the min label in its closed
-    neighborhood; converges in graph-diameter rounds, and near-dup
-    clusters are shallow (duplicates of one document form near-cliques,
-    diameter 2-3), so 3-5 rounds settle real workloads. Each round is
-    one join + one groupBy (2 shuffles) on (id, label) pairs — never the
-    pair-space. Convergence is checked with a cheap changed-count agg;
-    raises if max_iter rounds do not converge (a pathological chain —
-    at web scale switch to the O(log n)-round large-star/small-star
-    of Kiveris et al., "Connected Components in MapReduce and Beyond",
-    whose per-round shape is the same join+min as here).
-
-    Only ids that appear in some pair are returned (singletons are their
-    own cluster by definition and never shuffle).
-
-    ``algorithm="star"`` switches to alternating large-star/small-star
-    (Kiveris et al. 2014) — O(log n) rounds on ANY graph, including the
-    deep chains min-label propagation needs diameter rounds for. Same
-    per-round shape (groupBy-min + join on id rows), slightly more work
-    per round; pick it when cluster diameter is unknown.
-    """
-    if algorithm == "star":
-        return _dup_clusters_star(pairs, max_iter)
-    if algorithm != "propagate":
-        raise ValueError(f"algorithm must be propagate|star, got {algorithm!r}")
-    edges = (
-        pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .union(pairs.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .distinct()
-        .cache()  # re-joined every round; without this the pair source re-executes per round
-    )
-    # init: label = min(id, min neighbor) — one round for free.
-    # localCheckpoint (not cache) each round: caching keeps the LOGICAL
-    # plan, which doubles in depth every iteration and overwhelms
-    # Catalyst after ~20 rounds (the classic iterative-DataFrame trap);
-    # an eager local checkpoint truncates lineage to the materialized
-    # blocks, keeping round r's plan the same size as round 1's.
-    labels = (
-        edges.groupBy("u")
-        .agg(F.min("v").alias("mn"))
-        .select(F.col("u").alias("id"), F.least(F.col("u"), F.col("mn")).alias("label"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(labels.withColumnRenamed("id", "v"), "v")
-            .groupBy("u")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        new = (
-            labels.join(nbr.withColumnRenamed("u", "id"), "id", "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce("nbr_min", F.col("label"))).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new.withColumnRenamed("label", "new_label")
-            .join(labels, "id")
-            .where(F.col("new_label") != F.col("label"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new
-        if changed == 0:
-            edges.unpersist()
-            # labels is a checkpointed table: the returned frame reads the
-            # materialized blocks, not the iteration lineage
-            return labels.select("id", F.col("label").alias("cluster_id"))
-    edges.unpersist()
-    raise RuntimeError(
-        f"dup_clusters did not converge in {max_iter} rounds — "
-        "pathological chain graph; use a larger max_iter or a "
-        "large-star/small-star implementation"
-    )
-
-
-def _dup_clusters_star(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al. 2014, "Connected Components in MapReduce and Beyond", Alg. 2).
-
-    Edges live in canonical directed form (u, v) with u > v. Each round:
+    Algorithm: alternating large-star/small-star (Kiveris et al. 2014,
+    "Connected Components in MapReduce and Beyond", Alg. 2). Edges live
+    in canonical directed form (u, v) with u > v. Each round:
     large-star rewires every strictly-larger neighbor of u to
     m = min(closed neighborhood of u); small-star then rewires u's
     smaller neighbors (and u itself) to their minimum. Both halves are a
     groupBy-min plus an id-row join — never the pair space — and the
     edge count is non-increasing, so per-round cost shrinks. Converges to
     a star forest (every node points at its component minimum) in
-    O(log n) rounds on ANY graph shape, which is why this is the scale
-    path for deep chains where min-label propagation needs diameter
-    rounds. localCheckpoint per round truncates the doubling logical
-    plan (same trap as propagate — see dup_clusters).
+    O(log n) rounds on ANY graph shape, including the deep chains that
+    min-label propagation needs diameter rounds for. Raises if max_iter
+    rounds do not converge.
+
+    localCheckpoint (not cache) each round: caching keeps the LOGICAL
+    plan, which doubles in depth every iteration and overwhelms Catalyst
+    after ~20 rounds (the classic iterative-DataFrame trap); an eager
+    local checkpoint truncates lineage to the materialized blocks,
+    keeping round r's plan the same size as round 1's.
     """
     edges = (
         pairs.select(F.col("a").alias("x"), F.col("b").alias("y"))
@@ -581,25 +505,19 @@ def _dup_clusters_star(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             return leaves.union(roots)
     edges.unpersist()
     raise RuntimeError(
-        f"dup_clusters(star) did not converge in {max_iter} rounds — "
+        f"dup_clusters did not converge in {max_iter} rounds — "
         "star contraction is O(log n), so raise max_iter"
     )
 
 
-def dedup_keep_set(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    algorithm: str = "propagate",
-) -> DataFrame:
+def dedup_keep_set(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Apply near-dup clustering as a curation decision: keep the minimum
     id of every duplicate cluster plus every unpaired document. Returns
     the surviving rows of `df` (a left-anti join against the drop set —
     the drop set is tiny relative to the corpus, never the other way
-    round). `algorithm` passes through to dup_clusters ('star' for
-    corpora whose duplicate graphs may chain deeply)."""
+    round)."""
     drops = (
-        dup_clusters(pairs, algorithm=algorithm)
+        dup_clusters(pairs)
         .where(F.col("id") != F.col("cluster_id"))
         .select(F.col("id").alias(id_col))
     )

@@ -195,14 +195,14 @@ def with_salt(df: DataFrame, buckets: int, cols: list[str] | None = None) -> Dat
     )
 
 
-def two_level_count(df: DataFrame, keys: list[str], salt_buckets: int = 16) -> DataFrame:
+def two_level_count(df: DataFrame, keys: list[str], buckets: int = 16) -> DataFrame:
     """Skew-proof count: groupBy(keys, salt).count -> groupBy(keys).sum.
 
     For plain counts Spark's partial agg usually suffices; use this when
     a single key's rows would overflow one reducer's partition (Zipf-1
     shingles at web scale) or when composing with order-sensitive state.
     """
-    salted = with_salt(df, salt_buckets)
+    salted = with_salt(df, buckets)
     partial = salted.groupBy(*keys, "salt").agg(F.count(F.lit(1)).alias("pcount"))
     return partial.groupBy(*keys).agg(F.sum("pcount").alias("count"))
 

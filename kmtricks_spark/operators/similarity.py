@@ -323,7 +323,6 @@ def semantic_dedup(
     seed: int = 42,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    cluster_algorithm: str = "star",
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pruning (Abbas et al.
     2023, "SemDeDup: Data-efficient learning at web-scale through
@@ -338,7 +337,7 @@ def semantic_dedup(
        pair space is sum(cluster_size^2), bounded by scaling n_lists
        with the corpus, never N^2.
     3. Connected components over the qualifying pairs (large-star/
-       small-star by default) keep each group's minimum id.
+       small-star) keep each group's minimum id.
 
     Returns the surviving rows of `df` (left-anti against the drop set,
     like dedup_keep_set). Identical vectors always share a cluster
@@ -355,9 +354,7 @@ def semantic_dedup(
     )
     from kmtricks_spark.operators.dedup import dedup_keep_set
 
-    return dedup_keep_set(
-        df, pairs.select("a", "b"), id_col=id_col, algorithm=cluster_algorithm
-    )
+    return dedup_keep_set(df, pairs.select("a", "b"), id_col=id_col)
 
 
 def semantic_pairs(

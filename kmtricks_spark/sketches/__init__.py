@@ -1,22 +1,20 @@
-"""Mergeable sketch library (north-rule addition).
+"""Sketch library.
 
-Every sketch is a plain-bytes payload with a numpy-vectorized kernel
-exposing the same contract:
+``sketches/spark.py`` builds every sketch as a Spark aggregate, one
+payload row per group (``sketch_agg``):
 
-    create(**params) -> state
-    add_hashes(state, uint64[]) / add_values(state, float64[])
-    merge(a, b) -> state          (associative & commutative)
-    serialize(state) -> bytes / deserialize(bytes) -> state
-    estimate / query helpers
+- hll: a JVM register max (same hashing as ``hll.add_hashes``) and an
+  SQL estimate (``hll.estimate``'s formula);
+- kll: Spark's native ``kll_sketch_*`` functions;
+- cms: numpy Kirsch-Mitzenmacher cells (``cms.flat_cells``), summed in
+  the JVM and packed per group into ``cms.serialize``.
 
-Spark integration (spark.py) follows the partial -> merge -> final shape:
-mapInPandas computes per-batch partials (no shuffle of raw rows beyond
-the grouping), groupBy().applyInPandas merges payloads. Associativity
-under shuffle-order randomization is covered by tests for every sketch.
-
-``bloom`` is the exception: it holds the numpy layout kernels that the
-JVM Bloom builds in operators/bloom_stage.py must reproduce, plus the
-probe-side bit check.
+The numpy kernels here are what the Spark paths must reproduce:
+``hll`` (create / add_hashes / estimate) is the register and estimate
+reference, ``cms`` holds the cell layout, payload format and driver-side
+point queries, and ``bloom`` holds the layout kernels that the JVM Bloom
+builds in operators/bloom_stage.py reproduce, plus the probe-side bit
+check.
 """
 
-from kmtricks_spark.sketches import bloom, cms, hll, kll, tdigest  # noqa: F401
+from kmtricks_spark.sketches import bloom, cms, hll  # noqa: F401

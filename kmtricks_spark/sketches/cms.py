@@ -2,7 +2,8 @@
 
 Published bound (Cormode & Muthukrishnan 2005): with width w = ceil(e/eps)
 and depth d = ceil(ln(1/delta)), estimate(x) <= true(x) + eps*N with
-probability >= 1-delta (never underestimates). Merge = elementwise add.
+probability >= 1-delta (never underestimates). Merge = elementwise add
+(the Spark build sums cells per (group, cell) in the JVM).
 
 Row hashes are derived from the input hash h as h_i = h1 + i*h2 (Kirsch-
 Mitzenmacher double hashing), so callers only supply one 64-bit hash per
@@ -28,37 +29,27 @@ def create(width: int = 27183, depth: int = 5) -> np.ndarray:
     return np.zeros((depth, width), dtype=np.int64)
 
 
-def _row_indices(state: np.ndarray, hashes: np.ndarray) -> np.ndarray:
-    d, w = state.shape
+def flat_cells(width: int, depth: int, hashes: np.ndarray) -> np.ndarray:
+    """(depth, n) cells of the flattened sketch: row i's Kirsch-Mitzenmacher
+    index (h1 + i*h2) mod width, offset by i*width."""
     h1 = hashes.astype(np.uint64, copy=False)
     h2 = splitmix64(h1) | np.uint64(1)
-    i = np.arange(d, dtype=np.uint64)[:, None]
+    i = np.arange(depth, dtype=np.uint64)[:, None]
     with np.errstate(over="ignore"):
-        return ((h1[None, :] + i * h2[None, :]) % np.uint64(w)).astype(np.int64)
+        col = (h1[None, :] + i * h2[None, :]) % np.uint64(width)
+    return (col + i * np.uint64(width)).astype(np.int64)
 
 
 def add_hashes(state: np.ndarray, hashes: np.ndarray, counts: np.ndarray | None = None) -> np.ndarray:
-    if hashes.size == 0:
-        return state
-    idx = _row_indices(state, hashes)
+    d, w = state.shape
     c = np.ones(hashes.size, dtype=np.int64) if counts is None else counts.astype(np.int64)
-    for i in range(state.shape[0]):
-        np.add.at(state[i], idx[i], c)
+    np.add.at(state, np.divmod(flat_cells(w, d, hashes).ravel(), w), np.tile(c, d))
     return state
 
 
 def query(state: np.ndarray, hashes: np.ndarray) -> np.ndarray:
-    if hashes.size == 0:
-        return np.zeros(0, dtype=np.int64)
-    idx = _row_indices(state, hashes)
-    ests = np.stack([state[i][idx[i]] for i in range(state.shape[0])])
-    return ests.min(axis=0)
-
-
-def merge(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    if a.shape != b.shape:
-        raise ValueError("CMS shape mismatch")
-    return a + b
+    d, w = state.shape
+    return state[np.divmod(flat_cells(w, d, hashes), w)].min(axis=0, initial=np.iinfo(np.int64).max)
 
 
 def serialize(state: np.ndarray) -> bytes:

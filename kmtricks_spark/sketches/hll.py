@@ -3,14 +3,15 @@
 Published bound: relative standard error ~= 1.04 / sqrt(2^p)
 (Flajolet et al. 2007); p=14 -> ~0.81%. Replaces the reference's
 Bloom-based cardinality backsolve (utils.hpp:245-248).
-Merge = elementwise register max (associative, commutative, idempotent).
+
+The Spark path (sketches/spark.py: hll_registers, hll_estimate_col)
+computes the same registers and estimate as JVM aggregates; this numpy
+kernel is the reference the tests pin it against.
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-MAGIC = b"HLL1"
 
 
 def create(p: int = 14) -> np.ndarray:
@@ -48,12 +49,6 @@ def add_hashes(state: np.ndarray, hashes: np.ndarray) -> np.ndarray:
     return state
 
 
-def merge(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    if a.size != b.size:
-        raise ValueError("HLL size mismatch")
-    return np.maximum(a, b)
-
-
 def estimate(state: np.ndarray) -> float:
     m = float(state.size)
     if state.size >= 128:
@@ -66,38 +61,3 @@ def estimate(state: np.ndarray) -> float:
     if raw <= 2.5 * m and zeros:
         return m * np.log(m / zeros)  # linear counting, small range
     return float(raw)
-
-
-MAGIC_SPARSE = b"HLLS"
-
-
-def serialize(state: np.ndarray) -> bytes:
-    """Dense or sparse payload, whichever is smaller.
-
-    Sparse = (int32 idx, uint8 rank) pairs for non-zero registers — at
-    low fill (many groups, few items each: the per-URL/per-partition
-    sketch regime) this cuts shuffled payload bytes by up to 3000x while
-    in-memory ops stay dense."""
-    nz = np.flatnonzero(state)
-    sparse_bytes = 5 * nz.size
-    if sparse_bytes < state.size:
-        return (
-            MAGIC_SPARSE
-            + bytes([_p_of(state)])
-            + nz.astype(np.int32).tobytes()
-            + state[nz].tobytes()
-        )
-    return MAGIC + bytes([_p_of(state)]) + state.tobytes()
-
-
-def deserialize(buf: bytes) -> np.ndarray:
-    magic, p = buf[:4], buf[4]
-    if magic == MAGIC:
-        return np.frombuffer(buf[5:], dtype=np.uint8, count=1 << p).copy()
-    assert magic == MAGIC_SPARSE, "bad HLL payload"
-    n = (len(buf) - 5) // 5
-    idx = np.frombuffer(buf[5 : 5 + 4 * n], dtype=np.int32)
-    ranks = np.frombuffer(buf[5 + 4 * n :], dtype=np.uint8, count=n)
-    state = np.zeros(1 << p, dtype=np.uint8)
-    state[idx] = ranks
-    return state

@@ -2,9 +2,9 @@
 
 The reference is strictly batch (SURVEY §2.6); streaming is a
 north-rule-era addition for continuously-arriving page crawls. The same
-logical plan (shingle -> count) runs over readStream sources; sketch
-partials are naturally mergeable across micro-batches, and the windowed
-event aggregation shows watermarked late-data handling.
+logical plan (shingle -> count) runs over readStream sources; HLL
+registers are a native streaming max aggregate, and the windowed event
+aggregation shows watermarked late-data handling.
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ from pyspark.sql.types import (
 
 from kmtricks_spark.config import KmConfig
 from kmtricks_spark.functions.shingles import kgrams_sql
+from kmtricks_spark.sketches.spark import hll_registers
 
 DOCS_SCHEMA = StructType(
     [
@@ -72,90 +73,16 @@ def windowed_event_counts(
     )
 
 
-def streaming_hll(
-    docs: DataFrame, cfg: KmConfig, state: dict, ckpt_dir: str = "/tmp/kms_hll_ckpt"
-) -> "object":
-    """Continuous distinct-shingle cardinality per sample: each micro-batch
-    produces per-sample HLL payloads (partial -> merge inside the batch),
-    foreachBatch merges them into `state` {sample_id: hll registers}.
-
-    The sketch's associative merge is exactly what makes it
-    streaming-safe: batch boundaries don't change the result.
-    """
-    from kmtricks_spark.sketches import hll
-    from kmtricks_spark.sketches.spark import sketch_agg
-
-    def on_batch(batch_df, batch_id):
-        shingles = kgrams_sql(batch_df, cfg)
-        hashed = shingles.select("sample_id", F.xxhash64("kgram").alias("h"))
-        rows = sketch_agg(hashed, ["sample_id"], "h", "hll", p=12).collect()
-        for r in rows:
-            st = hll.deserialize(bytes(r["payload"]))
-            prev = state.get(r["sample_id"])
-            state[r["sample_id"]] = st if prev is None else hll.merge(prev, st)
-
-    q = (
-        docs.writeStream.foreachBatch(on_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt_dir)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
 def stateful_streaming_hll(docs: DataFrame, cfg: KmConfig, p: int = 12) -> DataFrame:
-    """Distinct-shingle cardinality per sample with the HLL payload held
-    as SPARK-MANAGED state (applyInPandasWithState), not a driver dict:
-    state scales with executors and survives checkpoint/restart, the
-    pattern that holds at millions of groups. Emits (sample_id,
-    est_distinct, updates) per group per micro-batch; `updates` counts
-    state revisions so a consumer can select each group's LATEST row —
-    the registers only grow, but the ESTIMATE is not monotone (the
-    linear-counting -> raw-estimator switch can step down), so max(est)
-    is not "final". The final payload equals the batch computation
-    exactly (register-max is order/batching-independent).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from kmtricks_spark.sketches import hll
-
-    out_schema = StructType(
-        [
-            StructField("sample_id", StringType()),
-            StructField("est_distinct", DoubleType()),
-            StructField("updates", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("payload", BinaryType()), StructField("updates", LongType())]
-    )
-
-    def update(key, pdfs, state):
-        if state.exists:
-            payload, n_upd = state.get
-            st = hll.deserialize(bytes(payload))
-        else:
-            st, n_upd = hll.create(p=p), 0
-        for pdf in pdfs:
-            hs = pdf["h"].to_numpy().astype(np.int64).view(np.uint64)
-            st = hll.add_hashes(st, hs)
-        n_upd += 1
-        state.update((bytearray(hll.serialize(st)), n_upd))
-        yield pd.DataFrame(
-            {
-                "sample_id": [key[0]],
-                "est_distinct": [float(hll.estimate(st))],
-                "updates": [n_upd],
-            }
-        )
-
-    shingles = kgrams_sql(docs, cfg)
-    hashed = shingles.select("sample_id", F.xxhash64("kgram").alias("h"))
-    return hashed.groupBy("sample_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", "NoTimeout"
-    )
+    """Distinct-shingle HLL registers per sample as a streaming register-max
+    aggregate (sketches/spark.py ``hll_registers`` over the stream): Spark
+    keeps (sample_id, idx) -> max(rank) as native state, so it scales with
+    executors and survives checkpoint/restart. A register max does not
+    depend on batching, so the complete-mode sink holds exactly the batch
+    registers; ``hll_payload`` + ``hll_estimate_col`` over the sink give
+    the estimate."""
+    hashed = kgrams_sql(docs, cfg).select("sample_id", F.xxhash64("kgram").alias("h"))
+    return hll_registers(hashed, ["sample_id"], "h", p)
 
 
 def stateful_streaming_cms(
@@ -167,9 +94,9 @@ def stateful_streaming_cms(
     text_col: str = "text",
 ) -> DataFrame:
     """Continuous per-sample token heavy-hitter estimates with the CMS
-    payload as SPARK-MANAGED state (the stateful_streaming_hll pattern,
-    frequency flavor): each micro-batch folds its token hashes into the
-    group's sketch, then reports the current estimate for every probe.
+    payload as SPARK-MANAGED state (applyInPandasWithState): each
+    micro-batch folds its token hashes into the group's sketch, then
+    reports the current estimate for every probe.
 
     `probe_hashes` = xxhash64 of the tracked tokens (computed once,
     batch-side; the stream must use the same hash). Cell-sum merge is

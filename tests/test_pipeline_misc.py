@@ -188,7 +188,7 @@ def test_balanced_map_spreads_hot_keys():
 
 def test_two_level_count_equals_plain(spark):
     df = spark.createDataFrame([(i % 5,) for i in range(1000)], ["k"])
-    got = {r.k: r["count"] for r in two_level_count(df, ["k"], salt_buckets=8).collect()}
+    got = {r.k: r["count"] for r in two_level_count(df, ["k"], buckets=8).collect()}
     assert got == {i: 200 for i in range(5)}
 
 

@@ -276,10 +276,11 @@ def test_auto_partitions(spark, sf_dir):
 
 
 def test_stateful_streaming_hll_equals_batch(spark, sf_dir, tmp_path):
-    """HLL payload as Spark-managed state across micro-batches: the final
-    estimate must EQUAL the batch computation (register-max is
-    order/batching-independent)."""
-    from kmtricks_spark.sketches.spark import hll_estimate_col, sketch_agg
+    """HLL registers as Spark-managed streaming state across micro-batches:
+    the complete-mode sink must EQUAL the batch registers row for row
+    (register-max is order/batching-independent)."""
+    from kmtricks_spark.functions.shingles import kgrams_sql
+    from kmtricks_spark.sketches.spark import hll_registers
     from kmtricks_spark.streaming.count_stream import (
         run_available_now,
         stateful_streaming_hll,
@@ -292,31 +293,13 @@ def test_stateful_streaming_hll_equals_batch(spark, sf_dir, tmp_path):
 
     cfg = KmConfig(k=8, hard_min=1)
     stream = stateful_streaming_hll(stream_docs(spark, src, max_files=1), cfg, p=12)
-    run_available_now(stream, "hll_state_test", output_mode="update")
-    # LATEST row per group (estimate is not monotone across the
-    # linear-counting/raw estimator switch; `updates` orders revisions)
-    got = spark.sql(
-        """
-        select sample_id, est as est from (
-          select sample_id, est_distinct as est,
-                 row_number() over (partition by sample_id order by updates desc) rn
-          from hll_state_test
-        ) where rn = 1
-        """
-    ).collect()
+    run_available_now(stream, "hll_state_test", output_mode="complete")
+    got = sorted(tuple(r) for r in spark.table("hll_state_test").collect())
     assert len(got) > 0
 
-    from kmtricks_spark.functions.shingles import kgrams_sql
-
     hashed = kgrams_sql(docs, cfg).select("sample_id", F.xxhash64("kgram").alias("h"))
-    batch = {
-        r["sample_id"]: r["est"]
-        for r in sketch_agg(hashed, ["sample_id"], "h", "hll", p=12)
-        .select("sample_id", hll_estimate_col().alias("est"))
-        .collect()
-    }
-    for r in got:
-        assert abs(r["est"] - batch[r["sample_id"]]) < 1e-9, r
+    batch = sorted(tuple(r) for r in hll_registers(hashed, ["sample_id"], "h", 12).collect())
+    assert got == batch
 
 
 def test_gopher_filters_flags(spark):

@@ -287,8 +287,9 @@ def test_dup_clusters_nonconvergence_raises(spark):
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(30)], ["a", "b"])
     with pytest.raises(RuntimeError, match="converge"):
-        # a 30-chain needs ~15 min-propagation rounds; 2 cannot finish
-        dup_clusters(chain, max_iter=2)
+        # one star round contracts a 30-chain but cannot also confirm a
+        # fixed point
+        dup_clusters(chain, max_iter=1)
     # ...but enough rounds do
     labels = dup_clusters(chain, max_iter=40).collect()
     assert all(r.cluster_id == 0 for r in labels) and len(labels) == 31

@@ -27,20 +27,18 @@ def _cli(args, timeout=300):
 # ------------------------------------------------ large-star/small-star
 
 def test_dup_clusters_star_chain_converges_fast(spark):
-    """The chain graph that min-label propagation cannot finish in 2
-    rounds (test_dup_clusters_nonconvergence_raises) clusters correctly
-    under algorithm='star' in O(log n) rounds — no raise."""
+    """A 30-chain, which min-label propagation would need ~15 rounds
+    for, clusters correctly in O(log n) star rounds — no raise."""
     from kmtricks_spark.operators.dedup import dup_clusters
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(30)], ["a", "b"])
-    labels = dup_clusters(chain, max_iter=10, algorithm="star").collect()
+    labels = dup_clusters(chain, max_iter=10).collect()
     assert all(r.cluster_id == 0 for r in labels) and len(labels) == 31
 
 
 def test_dup_clusters_star_vs_union_find_random_and_chains(spark):
     """Random graphs + deep chains (disjoint id spaces, one Spark run)
-    against a pure-Python union-find: star labels == component minima,
-    and == the propagate algorithm's labels."""
+    against a pure-Python union-find: star labels == component minima."""
     import numpy as np
 
     from kmtricks_spark.operators.dedup import dup_clusters
@@ -55,13 +53,13 @@ def test_dup_clusters_star_vs_union_find_random_and_chains(spark):
             a, b = (int(x) for x in rng.integers(0, n, 2))
             if a != b:
                 edges.append((base + min(a, b), base + max(a, b)))
-    # two deep chains — the propagate-hostile shape
+    # two deep chains — the shape min-label propagation needs diameter rounds for
     for g, ln in ((50, 80), (60, 55)):
         base = g * 1000
         edges += [(base + i, base + i + 1) for i in range(ln)]
     pairs = spark.createDataFrame(sorted(set(edges)), ["a", "b"])
     got = {r.id: r.cluster_id for r in
-           dup_clusters(pairs, max_iter=20, algorithm="star").collect()}
+           dup_clusters(pairs, max_iter=20).collect()}
 
     parent: dict = {}
 
@@ -81,16 +79,6 @@ def test_dup_clusters_star_vs_union_find_random_and_chains(spark):
         union(a, b)
     want = {x: find(x) for x in parent}
     assert got == want
-    prop = {r.id: r.cluster_id for r in dup_clusters(pairs, max_iter=200).collect()}
-    assert got == prop
-
-
-def test_dup_clusters_rejects_unknown_algorithm(spark):
-    from kmtricks_spark.operators.dedup import dup_clusters
-
-    pairs = spark.createDataFrame([(1, 2)], ["a", "b"])
-    with pytest.raises(ValueError, match="algorithm"):
-        dup_clusters(pairs, algorithm="bogus")
 
 
 # ------------------------------------------- two-pass group sampling
@@ -421,23 +409,38 @@ def test_ngram_max_df_universal_gram_no_window(spark):
 
 
 def test_curate_star_clustering_same_survivors(spark, docs):
-    """curate(minhash, cluster_algorithm='star') keeps exactly the same
-    survivor set as the propagate default — the algorithm choice is a
-    scale knob, never a semantics change."""
+    """curate(minhash) keeps exactly the minimum id of every connected
+    component of its LSH pairs (a pure-Python union-find over the same
+    pairs) plus every unpaired document."""
     from kmtricks_spark.operators.curation import curate
+    from kmtricks_spark.operators.dedup import minhash_lsh_pairs, minhash_signatures
 
     base = docs.select("doc_id", "text")
     dup = base.where(F.col("doc_id") < 15).select(
         (F.col("doc_id") + 500_000).alias("doc_id"), "text"
     )
     corpus = base.unionByName(dup)
-    kept_p, rep_p = curate(corpus, min_quality=None, dedup="minhash")
-    kept_s, rep_s = curate(corpus, min_quality=None, dedup="minhash",
-                           cluster_algorithm="star")
-    ids_p = {r.doc_id for r in kept_p.select("doc_id").collect()}
-    ids_s = {r.doc_id for r in kept_s.select("doc_id").collect()}
-    assert ids_p == ids_s and rep_p == rep_s
-    assert rep_p["after_dedup"] < rep_p["input"]  # the dedup gate fired
+    kept, rep = curate(corpus, min_quality=None, dedup="minhash")
+    got = {r.doc_id for r in kept.select("doc_id").collect()}
+
+    pairs = minhash_lsh_pairs(minhash_signatures(corpus), min_jaccard=0.8).collect()
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for r in pairs:
+        ra, rb = find(r.a), find(r.b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    drops = {x for x in parent if find(x) != x}
+    want = {r.doc_id for r in corpus.select("doc_id").collect()} - drops
+    assert got == want and rep["after_dedup"] == len(want)
+    assert rep["after_dedup"] < rep["input"]  # the dedup gate fired
 
 
 def test_curate_span_coverage_gate(spark):

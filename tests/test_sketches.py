@@ -1,11 +1,13 @@
-"""Sketch kernels: published error bounds + merge associativity under
-shuffle-order randomization (north-rule gates). Pure numpy — no Spark."""
+"""Sketch kernels: published error bounds + order independence under
+shuffle-order randomization (north-rule gates). The HLL and CMS kernels
+are pure numpy; the KLL checks run Spark's native sketch through
+sketches/spark.py."""
 
 import numpy as np
-import pytest
+import pandas as pd
 
 from kmtricks_spark.functions.hashing import hash64_u64
-from kmtricks_spark.sketches import bloom, cms, hll, kll, tdigest
+from kmtricks_spark.sketches import bloom, cms, hll
 
 RNG = np.random.default_rng(7)
 
@@ -30,34 +32,17 @@ def test_hll_small_range_linear_counting():
 
 
 def test_hll_merge_associative_and_shuffle_invariant():
+    """Folding 13 parts into one register array in any order gives the
+    registers of the whole stream: the register max that the Spark
+    aggregate (partial then final) relies on."""
     hs = _hashes(50_000)
     parts = np.array_split(hs, 13)
-    base = None
+    whole = hll.add_hashes(hll.create(p=12), hs)
     for perm in [RNG.permutation(13) for _ in range(20)]:
         st = hll.create(p=12)
         for i in perm:
-            st = hll.merge(st, hll.add_hashes(hll.create(p=12), parts[i]))
-        if base is None:
-            base = st
-        assert np.array_equal(st, base)
-    whole = hll.add_hashes(hll.create(p=12), hs)
-    assert np.array_equal(base, whole)
-
-
-def test_hll_serde_roundtrip():
-    st = hll.add_hashes(hll.create(p=10), _hashes(1000))
-    assert np.array_equal(hll.deserialize(hll.serialize(st)), st)
-
-
-def test_hll_sparse_payload_roundtrip_and_size():
-    # low fill -> sparse encoding, much smaller than dense, same registers
-    st = hll.add_hashes(hll.create(p=14), _hashes(50))
-    buf = hll.serialize(st)
-    assert buf[:4] == hll.MAGIC_SPARSE and len(buf) < (1 << 14) // 10
-    assert np.array_equal(hll.deserialize(buf), st)
-    # high fill -> dense
-    st2 = hll.add_hashes(hll.create(p=8), _hashes(10_000))
-    assert hll.serialize(st2)[:4] == hll.MAGIC
+            st = hll.add_hashes(st, parts[i])
+        assert np.array_equal(st, whole)
 
 
 # ------------------------------------------------------------------- CMS
@@ -84,7 +69,7 @@ def test_cms_merge_equals_whole_and_shuffle_invariant():
         order = RNG.permutation(7)
         st = cms.create(500, 4)
         for i in order:
-            st = cms.merge(st, cms.add_hashes(cms.create(500, 4), hs[parts[i]], cts[parts[i]]))
+            st = st + cms.add_hashes(cms.create(500, 4), hs[parts[i]], cts[parts[i]])
         assert np.array_equal(st, whole)  # integer sums: exactly associative
 
 
@@ -95,64 +80,38 @@ def test_cms_serde():
 
 # ------------------------------------------------------------------- KLL
 
-def test_kll_rank_error():
+def test_kll_rank_error(spark):
+    """Spark's native KLL at k=200 over 100k values (so it compacts):
+    kll_rank_rows stays within the rank bound."""
+    from pyspark.sql import functions as F
+
+    from kmtricks_spark.sketches.spark import kll_rank_rows, sketch_agg
+
     data = RNG.standard_normal(100_000)
-    st = kll.add_values(kll.create(k=200), data)
-    xs = np.quantile(data, [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99])
-    for q, x in zip([0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99], xs):
-        r = kll.rank(st, x)
-        assert abs(r - q) < 0.03, (q, r)
+    df = spark.createDataFrame(pd.DataFrame({"v": data})).select(F.lit("g").alias("g"), "v")
+    agg = sketch_agg(df, ["g"], "v", "kll", k=200)
+    qs = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
+    xs = np.quantile(data, qs)
+    got = {r.probe: r.rank for r in kll_rank_rows(agg, ["g"], list(xs)).collect()}
+    for q, x in zip(qs, xs):
+        assert abs(got[float(x)] - q) < 0.03, (q, got[float(x)])
 
 
-def test_kll_merge_bound_under_shuffle():
+def test_kll_merge_bound_under_shuffle(spark):
+    """The native KLL merged across 10 shuffled partitions keeps n and
+    the median's rank bound."""
+    from pyspark.sql import functions as F
+
+    from kmtricks_spark.sketches.spark import quantile_rows, sketch_agg
+
     data = RNG.standard_normal(60_000)
-    parts = np.array_split(data, 10)
-    for _ in range(5):
-        order = RNG.permutation(10)
-        st = kll.create(k=200)
-        for i in order:
-            st = kll.merge(st, kll.add_values(kll.create(k=200), parts[i]))
-        assert st.n == data.size
-        med = kll.quantile(st, 0.5)
-        true_rank = (data <= med).mean()
-        assert abs(true_rank - 0.5) < 0.04
-
-
-def test_kll_serde():
-    st = kll.add_values(kll.create(k=128), RNG.standard_normal(5000))
-    rt = kll.deserialize(kll.serialize(st))
-    assert rt.n == st.n and all(np.array_equal(a, b) for a, b in zip(rt.levels, st.levels))
-
-
-# --------------------------------------------------------------- t-digest
-
-def test_tdigest_rank_error():
-    data = RNG.exponential(size=100_000)
-    st = tdigest.add_values(tdigest.create(delta=200), data)
-    assert st.means.size <= 250  # compression held
-    for q in [0.01, 0.1, 0.5, 0.9, 0.99, 0.999]:
-        x = tdigest.quantile(st, q)
-        true_rank = (data <= x).mean()
-        assert abs(true_rank - q) < 0.02, (q, true_rank)
-
-
-def test_tdigest_merge_bound_under_shuffle():
-    data = RNG.standard_normal(50_000)
-    parts = np.array_split(data, 8)
-    for _ in range(5):
-        order = RNG.permutation(8)
-        st = tdigest.create(delta=200)
-        for i in order:
-            st = tdigest.merge(st, tdigest.add_values(tdigest.create(delta=200), parts[i]))
-        for q in [0.1, 0.5, 0.9]:
-            x = tdigest.quantile(st, q)
-            assert abs((data <= x).mean() - q) < 0.03
-
-
-def test_tdigest_serde():
-    st = tdigest.add_values(tdigest.create(), RNG.standard_normal(1000))
-    rt = tdigest.deserialize(tdigest.serialize(st))
-    assert np.allclose(rt.means, st.means) and np.allclose(rt.weights, st.weights)
+    df = spark.createDataFrame(pd.DataFrame({"v": data}))
+    for seed in range(3):
+        shuffled = df.select(F.lit("g").alias("g"), "v").orderBy(F.rand(seed)).repartition(10)
+        agg = sketch_agg(shuffled, ["g"], "v", "kll", k=200)
+        assert agg.select(F.kll_sketch_get_n_double("payload")).collect()[0][0] == data.size
+        med = quantile_rows(agg, ["g"], [0.5], "kll").collect()[0]["quantile"]
+        assert abs((data <= med).mean() - 0.5) < 0.04
 
 
 # ------------------------------------------------------------------ Bloom

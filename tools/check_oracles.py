@@ -1,6 +1,8 @@
 """Local stand-in for the driver's correctness gate: run every queries()
 entry on Spark and its oracle_sql() on DuckDB at sf0.01, compare row
-count, column names, and an order-insensitive value hash.
+count, column names, and an order-insensitive value hash. Queries with
+no oracle print their row count and value hash, so a run before and
+after a change can be compared.
 
 Usage: python tools/check_oracles.py [query ...]
 """
@@ -60,7 +62,11 @@ def main():
             failures += 1
             continue
         if name not in os_:
-            print(f"rows  {name}: {len(sdf)} rows (rows-only, {time.time()-t0:.1f}s)")
+            sdf.columns = [c.lower() for c in sdf.columns]
+            print(
+                f"rows  {name}: {len(sdf)} rows value_hash={value_hash(sdf)} "
+                f"(rows-only, {time.time()-t0:.1f}s)"
+            )
             continue
         try:
             odf = con.sql(os_[name]).df()
