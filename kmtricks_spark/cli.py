@@ -243,41 +243,12 @@ def main(argv=None):
 
             if args.until and not args.run_dir:
                 raise SystemExit("--until requires --run-dir")
-            if args.run_dir:
-                kept, report = curate_run(
-                    spark, args.run_dir, args.input,
-                    until=args.until,
-                    min_quality=(None if args.min_quality < 0 else args.min_quality),
-                    gopher=args.gopher,
-                    langs=args.langs.split(",") if args.langs else None,
-                    dedup=(None if args.dedup == "none" else args.dedup),
-                    min_jaccard=args.min_jaccard,
-                    decontaminate_path=args.decontaminate,
-                    contamination_n=args.contamination_n,
-                    max_dup_coverage=args.max_dup_coverage,
-                    span=args.span,
-                    stride=args.stride,
-                    span_action=args.span_action,
-                    max_docs_per_domain=args.max_docs_per_domain,
-                    url_col=args.url_col,
-                    semantic=args.semantic,
-                    vec_col=args.vec_col,
-                    semantic_n_lists=args.semantic_n_lists,
-                )
-                kept.write.mode("overwrite").parquet(args.output)
-                print(json.dumps({"curate": "done", "output": args.output, **report}))
-                return 0
-            kept, report = curate(
-                spark.read.parquet(args.input),
+            knobs = dict(
                 min_quality=(None if args.min_quality < 0 else args.min_quality),
                 gopher=args.gopher,
                 langs=args.langs.split(",") if args.langs else None,
                 dedup=(None if args.dedup == "none" else args.dedup),
                 min_jaccard=args.min_jaccard,
-                decontaminate=(
-                    spark.read.parquet(args.decontaminate)
-                    if args.decontaminate else None
-                ),
                 contamination_n=args.contamination_n,
                 max_dup_coverage=args.max_dup_coverage,
                 span=args.span,
@@ -289,6 +260,16 @@ def main(argv=None):
                 vec_col=args.vec_col,
                 semantic_n_lists=args.semantic_n_lists,
             )
+            if args.run_dir:
+                kept, report = curate_run(
+                    spark, args.run_dir, args.input, until=args.until,
+                    decontaminate_path=args.decontaminate, **knobs,
+                )
+            else:
+                bench = spark.read.parquet(args.decontaminate) if args.decontaminate else None
+                kept, report = curate(
+                    spark.read.parquet(args.input), decontaminate=bench, **knobs
+                )
             kept.write.mode("overwrite").parquet(args.output)
             print(json.dumps({"curate": "done", "output": args.output, **report}))
             return 0

@@ -7,13 +7,16 @@ transformations so Catalyst fuses the scalar filters into the scan and
 the only shuffles are the ones dedup inherently needs (md5 groupBy, or
 the LSH band join + star-contraction clustering for near-dup mode).
 
-Two entry points share the same gate bodies:
-* `curate(df, ...)` — in-session funnel: localCheckpoint per relational
-  gate, fused one-scan scalar prefix; returns (survivors, report).
+Two entry points run the same gate loop (`_funnel` over `_gate_table`)
+and differ only in how a gate's survivors are materialized:
+* `curate(df, ...)` — in-session funnel: one localCheckpoint per gate,
+  with the gate's survivor count observed on that job; returns
+  (survivors, report).
 * `curate_run(spark, run_dir, input_path, ...)` — persisted-stage
   funnel with the count pipeline's resume story (stage parquet tables +
   lineage JSON + kill-rerun skip, plans/lineage.py): each enabled gate
-  writes its survivors under <run_dir>/<stage>/ and a lineage record;
+  writes its survivors under <run_dir>/<stage>/ and a lineage record
+  holding the rows observed on that write and the funnel report so far;
   a re-run with identical params skips completed gates and rebuilds
   the report from lineage.
 """
@@ -21,8 +24,9 @@ Two entry points share the same gate bodies:
 from __future__ import annotations
 
 import os
+from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kmtricks_spark.functions.text import gopher_keep_col, lang_guess_col, quality_col
@@ -47,48 +51,26 @@ def _scalar_gates(
 
 
 def _scalar_pass(
-    df: DataFrame, gates: list[tuple[str, Column]], materialize=None
-) -> tuple[DataFrame, dict]:
-    """Scalar-gate funnel report + survivors.
-
-    Without ``materialize``: ONE conditional-aggregate scan yields the
-    whole report (input + running-conjunction stage counts — identical
-    to sequential gate application); the survivors frame is returned
-    lazy (the caller's checkpoint/write is a SECOND scan that re-
-    evaluates every gate expression).
-
-    With ``materialize`` (a callable survivors -> materialized frame,
-    or None if it wrote a sink): the whole pass is ONE corpus scan —
-    gate flags are computed once per row in a projection, the funnel
-    counts ride the SAME job as observed metrics (CollectMetrics), and
-    the report is read from the observation once the materializing job
-    finishes. Counts are identical: the metrics see every input row
-    (the filter sits above the observe node, so Catalyst cannot push it
-    past the metrics).
-    """
+    df: DataFrame, gates: list[tuple[str, Column]]
+) -> tuple[DataFrame, Callable[[], dict]]:
+    """Scalar-gate survivors and their funnel counts from ONE corpus
+    scan: gate flags are computed once per row in a projection, and the
+    funnel counts (input + running-conjunction stage counts, identical
+    to sequential gate application) ride the job that materializes the
+    survivors as observed metrics (CollectMetrics). Returns the lazy
+    survivors and ``counts``, which returns the report ({input, after_*})
+    once that job has finished. The metrics see every input row: the filter sits above the
+    observe node, so Catalyst cannot push it past the metrics."""
     conj_flags: list[tuple[str, Column]] = []
     conj = None
     for name, pred in gates:
         conj = pred if conj is None else (conj & pred)
         conj_flags.append((name, conj))
-    if materialize is None or not gates:
-        # count(when(...)) not sum(when/otherwise): count of an
-        # all-null column is 0, so an EMPTY corpus reports 0 per gate
-        # instead of null (sum over zero rows is null -> downstream
-        # arithmetic would crash)
-        aggs = [F.count(F.lit(1)).alias("input")] + [
-            F.count(F.when(c, F.lit(1))).alias(name) for name, c in conj_flags
-        ]
-        row = df.agg(*aggs).collect()[0]
-        report = {"input": row["input"], **{name: row[name] for name, _ in gates}}
-        return (df.where(conj) if conj is not None else df), report
-    from pyspark.sql import Observation
-
-    # one projection evaluates each gate's (expensive) expression once
-    # per row; both the metrics and the filter read the cheap flags
     flag_names = [f"__g{i}" for i in range(len(conj_flags))]
     flagged = df.select("*", *[c.alias(fn) for (_, c), fn in zip(conj_flags, flag_names)])
     obs = Observation()
+    # count(when(...)), not sum(when/otherwise): an EMPTY corpus then
+    # reports 0 per gate instead of null
     observed = flagged.observe(
         obs,
         F.count(F.lit(1)).alias("input"),
@@ -97,11 +79,8 @@ def _scalar_pass(
             for (name, _), fn in zip(conj_flags, flag_names)
         ],
     )
-    survivors = observed.where(F.col(flag_names[-1])).drop(*flag_names)
-    out = materialize(survivors)
-    m = obs.get  # blocks until the materializing job completes
-    report = {"input": m["input"], **{name: m[name] for name, _ in gates}}
-    return (out if out is not None else survivors), report
+    # obs.get blocks until the materializing job completes
+    return observed.where(F.col(flag_names[-1])).drop(*flag_names), lambda: obs.get
 
 
 def _domain_gate(
@@ -186,9 +165,10 @@ def _semantic_gate(
 def _span_gate(
     kept: DataFrame, max_dup_coverage: float, span: int, stride: int,
     text_col: str, id_col: str, span_action: str = "drop",
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (survivors, spans_handle); the caller MUST materialize
-    survivors then release_persisted(spans_handle).
+) -> DataFrame:
+    """Survivors carrying duplicate_spans' persisted span frame as
+    ``._km_persisted``: the caller materializes them, then calls
+    release_persisted(survivors).
 
     span_action='drop': remove whole documents over the coverage
     threshold (the Lee et al. drop decision). 'trim': keep every row
@@ -214,7 +194,9 @@ def _span_gate(
         .select(F.col("doc_id").alias(id_col))
     )
     if span_action == "drop":
-        return kept.join(heavy, id_col, "left_anti"), spans
+        out = kept.join(heavy, id_col, "left_anti")
+        out._km_persisted = spans._km_persisted
+        return out
     trimmed = trim_dup_spans(
         kept, spans, span=span, text_col=text_col, id_col=id_col, out_col="__trimmed"
     )
@@ -228,11 +210,12 @@ def _span_gate(
         )
         .drop("__h", "__trimmed")
     )
-    return out, spans
+    out._km_persisted = spans._km_persisted
+    return out
 
 
 def _decontam_gate(
-    kept: DataFrame, decontaminate: DataFrame, contamination_n: int,
+    kept: DataFrame, decontaminate: DataFrame | str, contamination_n: int,
     text_col: str, id_col: str,
 ) -> DataFrame:
     from kmtricks_spark.operators.dedup import benchmark_contamination
@@ -242,6 +225,8 @@ def _decontam_gate(
     # kept from the screen, so a synthesized bench id is fine (it
     # never reaches the output) and the anti-join side is tiny
     bench = decontaminate
+    if isinstance(bench, str):  # curate_run's parquet path, read only if the gate runs
+        bench = kept.sparkSession.read.parquet(bench)
     if "bench_id" not in bench.columns:
         bench = bench.withColumn("bench_id", F.monotonically_increasing_id())
     hits = benchmark_contamination(
@@ -249,6 +234,95 @@ def _decontam_gate(
         text_col=text_col, id_col=id_col, bench_text_col=text_col,
     ).select(F.col("doc_id").alias(id_col)).distinct()
     return kept.join(hits, id_col, "left_anti")
+
+
+# ------------------------------------------------------------ the funnel
+
+def _gate_table(
+    min_quality, gopher, langs, dedup, min_jaccard, text_col, id_col,
+    decontaminate, contamination_n, max_dup_coverage, span, stride,
+    semantic, vec_col, semantic_n_lists, span_action, max_docs_per_domain,
+    url_col,
+) -> list[tuple]:
+    """(stage, report key, enabled, body) per gate, in funnel order.
+    ``body(kept, report)`` returns the gate's lazy survivors; the scalar
+    gate, whose report key is None, returns (survivors, counts) instead
+    (see _scalar_pass). ``decontaminate`` is a benchmark DataFrame or a
+    parquet path, read only when the gate runs."""
+    if semantic_n_lists is not None and semantic_n_lists < 1:
+        raise ValueError(f"semantic_n_lists must be >= 1, got {semantic_n_lists}")
+    scalar = _scalar_gates(min_quality, gopher, langs, text_col)
+    return [
+        ("scalar", None, bool(scalar), lambda kept, report: _scalar_pass(kept, scalar)),
+        ("domain", "after_domain", max_docs_per_domain is not None,
+         lambda kept, report: _domain_gate(kept, max_docs_per_domain, url_col, id_col)),
+        ("dedup", "after_dedup", dedup is not None,
+         lambda kept, report: _dedup_gate(kept, dedup, min_jaccard, text_col, id_col)),
+        # the semantic gate sizes its IVF from the survivors so far
+        ("semantic", "after_semantic", semantic is not None,
+         lambda kept, report: _semantic_gate(
+             kept, semantic, vec_col, id_col, report[list(report)[-1]], semantic_n_lists)),
+        ("span", "after_span_dedup", max_dup_coverage is not None,
+         lambda kept, report: _span_gate(
+             kept, max_dup_coverage, span, stride, text_col, id_col, span_action)),
+        ("decontam", "after_decontam", decontaminate is not None,
+         lambda kept, report: _decontam_gate(
+             kept, decontaminate, contamination_n, text_col, id_col)),
+    ]
+
+
+def _funnel(
+    kept: DataFrame,
+    gates: list[tuple],
+    materialize: Callable[[str, DataFrame, Callable[[int], dict]], DataFrame],
+    resume: Callable[[str], tuple[DataFrame, dict] | None] = lambda stage: None,
+    until: str | None = None,
+) -> tuple[DataFrame, dict, dict]:
+    """Run the enabled gates in order; returns (survivors, report,
+    {stage: 'done'|'skipped'|'disabled'}).
+
+    ``materialize(stage, survivors, funnel)`` materializes one gate's
+    survivors and returns the materialized frame; it calls
+    ``funnel(rows)`` with the survivor count it observed, which folds
+    the gate's counts into the report and returns the report so far.
+    ``resume(stage)`` returns the table and lineage record of a stage
+    completed by an earlier run, or None."""
+    from kmtricks_spark.operators.dedup import release_persisted
+
+    report: dict = {}
+    status: dict = {}
+    for stage, key, enabled, body in gates:
+        if not enabled:
+            status[stage] = "disabled"
+        elif (done := resume(stage)) is not None:
+            kept, rec = done
+            report.update(rec["report"])
+            if key is not None:  # records that predate the cumulative report
+                report[key] = rec["output_rows"]
+            status[stage] = "skipped"
+        else:
+            if key is None:
+                out, counts = body(kept, report)
+            else:
+                if "input" not in report:  # no scalar gate: one count job
+                    report["input"] = kept.count()
+                out = body(kept, report)
+
+            def funnel(rows: int) -> dict:
+                report.update(counts() if key is None else {key: rows})
+                return dict(report)
+
+            kept = materialize(stage, out, funnel)
+            # the materialization cut the lineage to any cache the gate held
+            release_persisted(out)
+            status[stage] = "done"
+        if until == stage:
+            break
+    if "input" not in report:  # nothing enabled at all
+        report["input"] = kept.count()
+    last = [k for k in report if k.startswith("after_")]
+    report["removed"] = report["input"] - (report[last[-1]] if last else report["input"])
+    return kept, report, status
 
 
 # --------------------------------------------------------- in-session API
@@ -298,68 +372,31 @@ def curate(
     ivf_train needs >= n_lists sample rows).
 
     Scale shape: quality, gopher, and lang are pure per-row Column
-    predicates, so they are fused into ONE corpus scan — one conditional
-    aggregate produces the whole scalar-gate funnel report (input +
-    after_quality/after_gopher/after_lang, each the running conjunction,
-    identical to sequential application), and one localCheckpoint
-    materializes only the rows surviving all scalar gates. The dedup /
-    semantic / span-coverage / decontamination gates each end in their
-    own checkpoint + count as before (they are relational, not scalar,
-    and downstream gates re-read their survivors). At 100 TB this is 2
-    column-pruned scans + 1 survivor materialization for the scalar
-    prefix instead of up to 3 full-corpus materializations + 4 jobs.
-    For a funnel that should survive a kill, use curate_run.
+    predicates, so they are fused into ONE corpus scan that computes
+    the whole scalar-gate funnel report (input + after_quality/
+    after_gopher/after_lang, each the running conjunction, identical to
+    sequential application) as observed metrics of the localCheckpoint
+    that materializes the rows surviving all scalar gates. The domain /
+    dedup / semantic / span-coverage / decontamination gates are
+    relational, not scalar, and downstream gates re-read their
+    survivors, so each ends in its own localCheckpoint, whose survivor
+    count is observed on that same job. For a funnel that should
+    survive a kill, use curate_run.
     """
-    from kmtricks_spark.operators.dedup import release_persisted
 
-    if semantic_n_lists is not None and semantic_n_lists < 1:
-        raise ValueError(f"semantic_n_lists must be >= 1, got {semantic_n_lists}")
-    gates = _scalar_gates(min_quality, gopher, langs, text_col)
-    # materialize inside the pass: ONE scan computes flags, observed
-    # funnel counts, and the survivor checkpoint (was agg scan +
-    # checkpoint scan, each evaluating every gate expression)
-    kept, report = _scalar_pass(
-        df, gates, materialize=(lambda s: s.localCheckpoint()) if gates else None
+    def checkpoint(stage, survivors, funnel):
+        obs = Observation()
+        out = survivors.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint()
+        funnel(obs.get["rows"])
+        return out
+
+    gates = _gate_table(
+        min_quality, gopher, langs, dedup, min_jaccard, text_col, id_col,
+        decontaminate, contamination_n, max_dup_coverage, span, stride,
+        semantic, vec_col, semantic_n_lists, span_action, max_docs_per_domain,
+        url_col,
     )
-
-    if max_docs_per_domain is not None:
-        kept = _domain_gate(
-            kept, max_docs_per_domain, url_col, id_col
-        ).localCheckpoint()
-        report["after_domain"] = kept.count()
-
-    if dedup is not None:
-        kept = _dedup_gate(
-            kept, dedup, min_jaccard, text_col, id_col
-        ).localCheckpoint()
-        report["after_dedup"] = kept.count()
-
-    if semantic is not None:
-        survivors = report[list(report)[-1]]
-        kept = _semantic_gate(
-            kept, semantic, vec_col, id_col, survivors, semantic_n_lists,
-        ).localCheckpoint()
-        report["after_semantic"] = kept.count()
-
-    if max_dup_coverage is not None:
-        out, spans = _span_gate(
-            kept, max_dup_coverage, span, stride, text_col, id_col, span_action
-        )
-        kept = out.localCheckpoint()
-        report["after_span_dedup"] = kept.count()
-        # duplicate_spans persists its span frame (the two-consumer
-        # exchange share); the checkpoint above cut our lineage to it,
-        # so release the executor cache instead of leaking it across
-        # repeated curate() calls in one session
-        release_persisted(spans)
-
-    if decontaminate is not None:
-        kept = _decontam_gate(
-            kept, decontaminate, contamination_n, text_col, id_col
-        ).localCheckpoint()
-        report["after_decontam"] = kept.count()
-
-    report["removed"] = report["input"] - report[list(report)[-1]]
+    kept, report, _ = _funnel(df, gates, checkpoint)
     return kept, report
 
 
@@ -392,15 +429,15 @@ def curate_run(
     """The curation funnel with the count pipeline's operational
     semantics (plans/pipeline.py / plans/lineage.py): every enabled gate
     persists its survivors as a parquet stage table under
-    <run_dir>/<stage>/ plus a lineage JSON (params, row counts,
-    content checksum). A re-run skips gates whose lineage matches and
-    whose table is readable — kill-and-rerun resumes past completed
-    gates. Lineage params are scoped per gate (own knobs + enabled
-    upstream knobs), so changing a knob invalidates exactly its gate
-    and everything downstream, while enabling a NEW downstream gate on
-    a completed run reuses the upstream stages as-is. `until` stops
-    after the named stage ('scalar'|'domain'|'dedup'|'semantic'|'span'|
-    'decontam').
+    <run_dir>/<stage>/ plus a lineage JSON (params, the row count and
+    checksum observed on the write, the funnel report so far). A re-run
+    skips gates whose lineage matches and whose table is readable —
+    kill-and-rerun resumes past completed gates. Lineage params are
+    scoped per gate (own knobs + enabled upstream knobs), so changing a
+    knob invalidates exactly its gate and everything downstream, while
+    enabling a NEW downstream gate on a completed run reuses the
+    upstream stages as-is. `until` stops after the named stage
+    ('scalar'|'domain'|'dedup'|'semantic'|'span'|'decontam').
 
     The parquet table IS the inter-stage materialization (no
     localCheckpoint here — survivors are written once and re-read), so
@@ -408,14 +445,17 @@ def curate_run(
     (survivors_of_last_completed_stage, report) with the report
     reconstructed from lineage on resume.
     """
-    from kmtricks_spark.operators.dedup import release_persisted
     from kmtricks_spark.plans.lineage import read_lineage, stage_complete, write_lineage
     from kmtricks_spark.sources.pages import read_stage, write_stage
 
     if until is not None and until not in CURATE_STAGES:
         raise ValueError(f"until must be one of {CURATE_STAGES}")
-    if semantic_n_lists is not None and semantic_n_lists < 1:
-        raise ValueError(f"semantic_n_lists must be >= 1, got {semantic_n_lists}")
+    gates = _gate_table(
+        min_quality, gopher, langs, dedup, min_jaccard, text_col, id_col,
+        decontaminate_path, contamination_n, max_dup_coverage, span, stride,
+        semantic, vec_col, semantic_n_lists, span_action, max_docs_per_domain,
+        url_col,
+    )
     # params are scoped PER GATE and accumulated down the funnel: a
     # stage's lineage binds its own knobs plus every ENABLED upstream
     # gate's knobs (its input provenance). Changing a knob therefore
@@ -438,25 +478,10 @@ def curate_run(
             "contamination_n": contamination_n,
         },
     }
-    common = {
-        "input": os.path.realpath(input_path),
-        "text_col": text_col, "id_col": id_col,
-    }
-    enabled = {
-        "scalar": bool(_scalar_gates(min_quality, gopher, langs, text_col)),
-        "domain": max_docs_per_domain is not None,
-        "dedup": dedup is not None,
-        "semantic": semantic is not None,
-        "span": max_dup_coverage is not None,
-        "decontam": decontaminate_path is not None,
-    }
-
-    report: dict = {}
-    kept = spark.read.parquet(input_path)
-    status: dict = {}
+    enabled = {stage: on for stage, _, on, _ in gates}
 
     def params_of(stage: str) -> dict:
-        p = dict(common)
+        p = {"input": os.path.realpath(input_path), "text_col": text_col, "id_col": id_col}
         for s in CURATE_STAGES:
             if enabled[s]:
                 p.update(stage_params[s])
@@ -465,96 +490,21 @@ def curate_run(
         p["stage"] = stage
         return p
 
-    def finish(
-        stage: str, out: DataFrame, extra_report: dict, written: bool = False
-    ) -> DataFrame:
-        if not written:  # the scalar gate writes inside its one-scan pass
-            write_stage(out, run_dir, stage)
-        table = read_stage(spark, run_dir, stage)
+    def persist(stage, survivors, funnel):
+        observed = write_stage(survivors, run_dir, stage)
         write_lineage(
-            run_dir, stage, params_of(stage), table, part_col=None,
-            extra={"report": {k: int(v) for k, v in extra_report.items()}},
+            run_dir, stage, params_of(stage), observed,
+            extra={"report": funnel(observed["output_rows"])},
         )
-        report.update(extra_report)
-        status[stage] = "done"
-        return table
-
-    _after_key = {
-        "domain": "after_domain",
-        "dedup": "after_dedup", "semantic": "after_semantic",
-        "span": "after_span_dedup", "decontam": "after_decontam",
-    }
-
-    def resume(stage: str) -> DataFrame:
-        rec = read_lineage(run_dir, stage)
-        report.update(rec.get("report", {}))
-        if stage in _after_key:
-            report[_after_key[stage]] = rec["output_rows"]
-        status[stage] = "skipped"
         return read_stage(spark, run_dir, stage)
 
-    for stage in CURATE_STAGES:
-        if not enabled[stage]:
-            status[stage] = "disabled"
-            if until == stage:
-                break
-            continue
-        if stage_complete(spark, run_dir, stage, params_of(stage)):
-            kept = resume(stage)
-        elif stage == "scalar":
-            gates = _scalar_gates(min_quality, gopher, langs, text_col)
-            # the stage parquet write IS the materialization: fuse the
-            # funnel-report metrics onto the writing job (one scan)
-            out, rep = _scalar_pass(
-                kept, gates,
-                materialize=lambda s: write_stage(s, run_dir, stage),
-            )
-            kept = finish(stage, out, rep, written=True)
-        elif stage == "domain":
-            if "input" not in report:
-                report["input"] = kept.count()
-            out = _domain_gate(kept, max_docs_per_domain, url_col, id_col)
-            kept = finish(stage, out, {"input": report["input"]})
-            report["after_domain"] = read_lineage(run_dir, stage)["output_rows"]
-        elif stage == "dedup":
-            if "input" not in report:
-                report["input"] = kept.count()
-            out = _dedup_gate(kept, dedup, min_jaccard, text_col, id_col)
-            kept = finish(stage, out, {"input": report["input"]})
-            report["after_dedup"] = read_lineage(run_dir, stage)["output_rows"]
-        elif stage == "semantic":
-            if "input" not in report:
-                report["input"] = kept.count()
-            survivors = report[list(report)[-1]]
-            out = _semantic_gate(
-                kept, semantic, vec_col, id_col, survivors, semantic_n_lists,
-            )
-            kept = finish(stage, out, {"input": report["input"]})
-            report["after_semantic"] = read_lineage(run_dir, stage)["output_rows"]
-        elif stage == "span":
-            if "input" not in report:
-                report["input"] = kept.count()
-            out, spans = _span_gate(
-                kept, max_dup_coverage, span, stride, text_col, id_col, span_action
-            )
-            kept = finish(stage, out, {"input": report["input"]})
-            release_persisted(spans)
-            report["after_span_dedup"] = read_lineage(run_dir, stage)["output_rows"]
-        elif stage == "decontam":
-            if "input" not in report:
-                report["input"] = kept.count()
-            out = _decontam_gate(
-                kept, spark.read.parquet(decontaminate_path), contamination_n,
-                text_col, id_col,
-            )
-            kept = finish(stage, out, {"input": report["input"]})
-            report["after_decontam"] = read_lineage(run_dir, stage)["output_rows"]
-        if until == stage:
-            break
+    def resume(stage):
+        if not stage_complete(spark, run_dir, stage, params_of(stage)):
+            return None
+        return read_stage(spark, run_dir, stage), read_lineage(run_dir, stage)
 
-    if "input" not in report:  # nothing enabled at all
-        report["input"] = kept.count()
-    last = [k for k in report if k.startswith("after_")]
-    report["removed"] = report["input"] - (report[last[-1]] if last else report["input"])
+    kept, report, status = _funnel(
+        spark.read.parquet(input_path), gates, persist, resume, until
+    )
     report["stages"] = status
     return kept, report

@@ -3,11 +3,18 @@
 kmtricks persists every stage to its run directory so any (stage, sample,
 partition) granularity can be re-run idempotently (kmdir.hpp:195-241,
 cmd.hpp:74-272). Our equivalent: each stage writes its table plus a
-lineage JSON (stage, params, input/output rows, per-partition row counts,
-an order-insensitive content checksum, timestamp). A stage is *complete*
-iff its lineage exists, its params match, and its table is readable —
-`Pipeline.run` skips complete stages, which is exactly kill-and-rerun
-resumability.
+lineage JSON, ``_lineage/<stage>.json``, with the fields
+
+* ``stage`` and ``params`` (the knobs the stage's output depends on);
+* ``output_rows``, ``checksum`` (order-insensitive, 63-bit) and
+  ``partitions`` (sorted part ids written, or None for a table not
+  partitioned by part_id), all three observed on the stage's write job
+  by ``sources.pages.write_stage``, so recording them scans nothing;
+* ``ts``, plus any caller extras (``curate_run`` adds its funnel report).
+
+A stage is *complete* iff its lineage exists, its params match, and its
+table is readable — `Pipeline.run` skips complete stages, which is
+exactly kill-and-rerun resumability.
 """
 
 from __future__ import annotations
@@ -17,18 +24,9 @@ import os
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 LINEAGE_DIR = "_lineage"
-
-
-def content_checksum(df: DataFrame) -> int:
-    """Order-insensitive 63-bit content checksum: sum of row hashes."""
-    cols = [F.col(c) for c in sorted(df.columns)]
-    row = df.select(F.xxhash64(*cols).alias("h"))
-    v = row.agg(F.sum(F.col("h") % F.lit(2**31)).alias("s")).collect()[0]["s"]
-    return int(v or 0) & ((1 << 63) - 1)
 
 
 def lineage_path(run_dir: str, stage: str) -> str:
@@ -39,28 +37,12 @@ def write_lineage(
     run_dir: str,
     stage: str,
     params: dict[str, Any],
-    out_df: DataFrame,
-    input_rows: int | None = None,
-    part_col: str | None = "part_id",
+    observed: dict,
     extra: dict | None = None,
 ) -> dict:
-    rows = out_df.count()
-    per_part = None
-    if part_col and part_col in out_df.columns:
-        per_part = {
-            str(r[part_col]): r["n"]
-            for r in out_df.groupBy(part_col).agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-    rec = {
-        "stage": stage,
-        "params": params,
-        "input_rows": input_rows,
-        "output_rows": rows,
-        "partitions": per_part,
-        "checksum": content_checksum(out_df),
-        "ts": time.time(),
-        **(extra or {}),
-    }
+    """Record a finished stage; ``observed`` is what its ``write_stage``
+    returned. Writes JSON only: no Spark job."""
+    rec = {"stage": stage, "params": params, **observed, "ts": time.time(), **(extra or {})}
     os.makedirs(os.path.join(run_dir, LINEAGE_DIR), exist_ok=True)
     with open(lineage_path(run_dir, stage), "w") as f:
         json.dump(rec, f, indent=1, default=str)

@@ -94,10 +94,16 @@ class Pipeline:
         p = {**self._params, "stage": stage}
         if stage == "matrix":
             p["plugin"] = self._plugin_spec
+        if stage in ("matrix", "pa"):
+            # _merge_cfg's per-sample soft-min thresholds shape both
+            p["soft_min_quantile"] = self.soft_min_quantile
         return p
 
-    def _finish(self, stage: str, df: DataFrame, **extra):
-        write_lineage(self.run_dir, stage, self._stage_params(stage), df, **extra)
+    def _finish(self, stage: str, observed: dict) -> bool:
+        """Record the stage's lineage, last, once all its tables are
+        written; returns True (the stage ran)."""
+        write_lineage(self.run_dir, stage, self._stage_params(stage), observed)
+        return True
 
     def _restrict(self, df: DataFrame) -> DataFrame:
         if self.restrict_to is not None:
@@ -149,11 +155,13 @@ class Pipeline:
         save_partitioner(own_path, hot_map, cfg.k, cfg.m, cfg.nb_partitions)
         return hot_map
 
-    def stage_counts(self):
-        if not self._done("counts"):
-            counts = count_kgrams(self._input(), self.cfg, hot_map=self._hot_map())
-            write_stage(counts, self.run_dir, "counts", partition_by=["part_id"])
-            self._finish("counts", read_stage(self.spark, self.run_dir, "counts"))
+    def stage_counts(self) -> bool:
+        if self._done("counts"):
+            return False
+        counts = count_kgrams(self._input(), self.cfg, hot_map=self._hot_map())
+        return self._finish(
+            "counts", write_stage(counts, self.run_dir, "counts", partition_by=["part_id"])
+        )
 
     def _hist_bounds(self) -> tuple[int, int | None] | None:
         """(lower, upper) when the histogram is bounded in ANY direction —
@@ -164,25 +172,23 @@ class Pipeline:
             return None
         return lower, upper
 
-    def stage_histogram(self):
-        if not self._done("histogram"):
-            counts = read_stage(self.spark, self.run_dir, "counts")
-            bounds = self._hist_bounds()
-            if bounds:
-                from kmtricks_spark.operators.count import histogram_oob
+    def stage_histogram(self) -> bool:
+        if self._done("histogram"):
+            return False
+        counts = read_stage(self.spark, self.run_dir, "counts")
+        bounds = self._hist_bounds()
+        if bounds:
+            from kmtricks_spark.operators.count import histogram_oob
 
-                h = histogram(counts, bounds[0], bounds[1])
-                write_stage(
-                    histogram_oob(counts, bounds[0], bounds[1]),
-                    self.run_dir,
-                    "histogram_oob",
-                )
-            else:
-                h = histogram(counts)
-            write_stage(h, self.run_dir, "histogram")
-            self._finish(
-                "histogram", read_stage(self.spark, self.run_dir, "histogram"), part_col=None
+            h = histogram(counts, bounds[0], bounds[1])
+            write_stage(
+                histogram_oob(counts, bounds[0], bounds[1]),
+                self.run_dir,
+                "histogram_oob",
             )
+        else:
+            h = histogram(counts)
+        return self._finish("histogram", write_stage(h, self.run_dir, "histogram"))
 
     def _merge_cfg(self) -> KmConfig:
         cfg = self.cfg
@@ -199,62 +205,61 @@ class Pipeline:
     def _samples(self, counts: DataFrame) -> list[str]:
         return sorted(r.sample_id for r in counts.select("sample_id").distinct().collect())
 
-    def stage_matrix(self):
-        if not self._done("matrix"):
-            counts = self._restrict(read_stage(self.spark, self.run_dir, "counts"))
-            cfg = self._merge_cfg()
-            m = count_matrix(counts, self._samples(counts), cfg)
-            if self.plugin is not None:
-                from kmtricks_spark.operators.plugin import apply_plugin
+    def stage_matrix(self) -> bool:
+        if self._done("matrix"):
+            return False
+        counts = self._restrict(read_stage(self.spark, self.run_dir, "counts"))
+        cfg = self._merge_cfg()
+        m = count_matrix(counts, self._samples(counts), cfg)
+        if self.plugin is not None:
+            from kmtricks_spark.operators.plugin import apply_plugin
 
-                # merge-time veto/transform hook (J7): applied to merged
-                # rows before persist, the reference's call site
-                # (merge.hpp:252-257)
-                m = apply_plugin(m, self.plugin)
-            write_stage(m, self.run_dir, "matrix", partition_by=["part_id"])
-            self._finish("matrix", read_stage(self.spark, self.run_dir, "matrix"))
-            write_stage(merge_stats(counts, cfg), self.run_dir, "merge_stats")
+            # merge-time veto/transform hook (J7): applied to merged
+            # rows before persist, the reference's call site
+            # (merge.hpp:252-257)
+            m = apply_plugin(m, self.plugin)
+        observed = write_stage(m, self.run_dir, "matrix", partition_by=["part_id"])
+        write_stage(merge_stats(counts, cfg), self.run_dir, "merge_stats")
+        return self._finish("matrix", observed)
 
-    def stage_pa(self):
-        if not self._done("pa"):
-            counts = self._restrict(read_stage(self.spark, self.run_dir, "counts"))
-            cfg = self._merge_cfg()
-            p = pa_matrix(counts, self._samples(counts), cfg)
-            write_stage(p, self.run_dir, "pa", partition_by=["part_id"])
-            self._finish("pa", read_stage(self.spark, self.run_dir, "pa"))
+    def stage_pa(self) -> bool:
+        if self._done("pa"):
+            return False
+        counts = self._restrict(read_stage(self.spark, self.run_dir, "counts"))
+        cfg = self._merge_cfg()
+        p = pa_matrix(counts, self._samples(counts), cfg)
+        return self._finish("pa", write_stage(p, self.run_dir, "pa", partition_by=["part_id"]))
 
-    def stage_bloom(self):
-        if not self._done("bloom"):
-            counts = self._restrict(read_stage(self.spark, self.run_dir, "counts"))
-            hc = hash_counts(counts, self.cfg)
-            mode = self.cfg.bloom_mode
-            if mode == "bfc":
-                from kmtricks_spark.operators.bloom_stage import bfc_slices
+    def stage_bloom(self) -> bool:
+        if self._done("bloom"):
+            return False
+        counts = self._restrict(read_stage(self.spark, self.run_dir, "counts"))
+        hc = hash_counts(counts, self.cfg)
+        mode = self.cfg.bloom_mode
+        if mode == "bfc":
+            from kmtricks_spark.operators.bloom_stage import bfc_slices
 
-                write_stage(
-                    bfc_slices(hc, self.cfg), self.run_dir, "bloom",
-                    partition_by=["part_id"],
-                )
-                self._finish("bloom", read_stage(self.spark, self.run_dir, "bloom"))
-                return
-            if mode not in ("bf", "bft"):
-                raise ValueError(f"bloom_mode must be bf|bft|bfc, got {mode!r}")
-            # bft's transposed rows equal bf's slices byte for byte
-            slices = bf_slices(hc, self.cfg)
-            write_stage(slices, self.run_dir, "bloom", partition_by=["part_id"])
-            slices_r = read_stage(self.spark, self.run_dir, "bloom")
-            write_stage(bf_concat(slices_r, self.cfg), self.run_dir, "bloom_filters")
-            write_stage(fpr_report(slices_r, self.cfg), self.run_dir, "fpr")
-            if self.export_bf:
-                from kmtricks_spark.sources.howde import export_filters
+            return self._finish("bloom", write_stage(
+                bfc_slices(hc, self.cfg), self.run_dir, "bloom", partition_by=["part_id"]
+            ))
+        if mode not in ("bf", "bft"):
+            raise ValueError(f"bloom_mode must be bf|bft|bfc, got {mode!r}")
+        # bft's transposed rows equal bf's slices byte for byte
+        slices = bf_slices(hc, self.cfg)
+        observed = write_stage(slices, self.run_dir, "bloom", partition_by=["part_id"])
+        slices_r = read_stage(self.spark, self.run_dir, "bloom")
+        write_stage(bf_concat(slices_r, self.cfg), self.run_dir, "bloom_filters")
+        write_stage(fpr_report(slices_r, self.cfg), self.run_dir, "fpr")
+        if self.export_bf:
+            from kmtricks_spark.sources.howde import export_filters
 
-                export_filters(
-                    read_stage(self.spark, self.run_dir, "bloom_filters"),
-                    os.path.join(self.run_dir, "filters"),
-                    self.cfg,
-                    bf_format=self.export_bf,
-                )
-            self._finish("bloom", slices_r)
+            export_filters(
+                read_stage(self.spark, self.run_dir, "bloom_filters"),
+                os.path.join(self.run_dir, "filters"),
+                self.cfg,
+                bf_format=self.export_bf,
+            )
+        return self._finish("bloom", observed)
 
     def run(self) -> dict[str, str]:
         """Execute stages in order, skipping complete ones; stop at
@@ -267,9 +272,7 @@ class Pipeline:
         t0 = time.time()
         status = {}
         for stage in STAGES:
-            was_done = self._done(stage)
-            getattr(self, f"stage_{stage}")()
-            status[stage] = "skipped" if was_done else "done"
+            status[stage] = "done" if getattr(self, f"stage_{stage}")() else "skipped"
             if self.until == stage:
                 break
         os.makedirs(self.run_dir, exist_ok=True)

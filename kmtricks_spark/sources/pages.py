@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -63,12 +63,32 @@ def load_pages(
     return out.select("url", "sample_id", "text", *(["lang"] if "lang" in cols else []))
 
 
-def write_stage(df: DataFrame, run_dir: str, stage: str, partition_by: list[str] | None = None):
-    """Stage sink: parquet under <run_dir>/<stage>/ (KmDir analogue)."""
-    w = df.write.mode("overwrite")
+def write_stage(
+    df: DataFrame, run_dir: str, stage: str, partition_by: list[str] | None = None
+) -> dict:
+    """Stage sink: parquet under <run_dir>/<stage>/ (KmDir analogue).
+
+    Returns the stage's lineage numbers (plans/lineage.py), observed on
+    the write job itself so no read-back scan is needed: ``output_rows``;
+    ``checksum``, order-insensitive: the sum over rows of
+    xxhash64(columns in name order) mod 2^31, masked to 63 bits; and
+    ``partitions``, the
+    sorted part ids written, or None for a table not partitioned by
+    part_id. The hash sees the same values a read-back would: part_id is
+    an int column, which is also the type parquet infers for it."""
+    checksum = F.sum(F.xxhash64(*[F.col(c) for c in sorted(df.columns)]) % F.lit(2**31))
+    metrics = [
+        F.count(F.lit(1)).alias("output_rows"),
+        F.coalesce(checksum, F.lit(0)).bitwiseAND(F.lit((1 << 63) - 1)).alias("checksum"),
+    ]
+    if "part_id" in (partition_by or ()):
+        metrics.append(F.sort_array(F.collect_set("part_id")).alias("partitions"))
+    obs = Observation()
+    w = df.observe(obs, *metrics).write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(os.path.join(run_dir, stage))
+    return {"partitions": None, **obs.get}
 
 
 def read_stage(spark: SparkSession, run_dir: str, stage: str) -> DataFrame:

@@ -373,24 +373,32 @@ def test_curate_run_resume_skips_completed_gates(spark, sf_dir, tmp_path):
 
 def test_curate_run_kill_rerun_and_matches_in_session(spark, sf_dir, tmp_path):
     """until='scalar' (a killed run's prefix), then the full run resumes
-    past it; survivors == the in-session curate() on the same corpus."""
+    past it; report and survivors == the in-session curate() on the same
+    corpus, over the benchmark's gates (quality + gopher, minhash dedup,
+    decontamination), so both materializations of the shared gate loop
+    are pinned."""
     from kmtricks_spark.operators.curation import curate, curate_run
     from kmtricks_spark.plans.lineage import read_lineage
 
     inp = os.path.join(sf_dir, "documents.parquet")
+    docs = spark.read.parquet(inp)
+    bench = str(tmp_path / "bench.parquet")
+    docs.orderBy("doc_id").limit(5).select("text").write.parquet(bench)
+    gates = dict(min_quality=0.5, gopher=True, dedup="minhash", min_jaccard=0.8)
     rd = str(tmp_path / "crun2")
     _, rep_partial = curate_run(
-        spark, rd, inp, until="scalar", min_quality=0.5, dedup="exact"
+        spark, rd, inp, until="scalar", decontaminate_path=bench, **gates
     )
-    assert rep_partial["stages"] == {"scalar": "done", "dedup": "disabled"} or \
-        rep_partial["stages"].get("dedup") != "done"
+    assert rep_partial["stages"] == {"scalar": "done"}
     ts_scalar = read_lineage(rd, "scalar")["ts"]
-    kept, rep = curate_run(spark, rd, inp, min_quality=0.5, dedup="exact")
-    assert rep["stages"]["scalar"] == "skipped" and rep["stages"]["dedup"] == "done"
+    kept, rep = curate_run(spark, rd, inp, decontaminate_path=bench, **gates)
+    assert rep["stages"]["scalar"] == "skipped"
+    assert rep["stages"]["dedup"] == rep["stages"]["decontam"] == "done"
     assert read_lineage(rd, "scalar")["ts"] == ts_scalar
-    docs = spark.read.parquet(inp)
-    kept_mem, rep_mem = curate(docs, min_quality=0.5, dedup="exact")
-    assert rep["after_dedup"] == rep_mem["after_dedup"]
+    kept_mem, rep_mem = curate(docs, decontaminate=spark.read.parquet(bench), **gates)
+    keys = ("input", "after_quality", "after_gopher", "after_dedup", "after_decontam", "removed")
+    assert {k: rep[k] for k in keys} == rep_mem
+    assert rep["after_decontam"] < rep["after_dedup"] < rep["after_gopher"]
     assert {r.doc_id for r in kept.select("doc_id").collect()} == {
         r.doc_id for r in kept_mem.select("doc_id").collect()
     }

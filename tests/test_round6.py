@@ -129,17 +129,21 @@ def test_bf_slices_min_count_keeps_filtered_groups(spark):
 
 def test_scalar_pass_one_scan_report_matches_two_scan(spark, docs):
     """The observed-metrics (one-scan) scalar pass must report the exact
-    counts of the separate-aggregate form."""
+    counts of a separate conditional aggregate (the two-scan form)."""
     from kmtricks_spark.operators.curation import _scalar_gates, _scalar_pass
 
     d = docs.select("doc_id", "text")
     gates = _scalar_gates(0.5, True, None, "text")
-    lazy_kept, rep_two = _scalar_pass(d, gates)
-    kept_one, rep_one = _scalar_pass(
-        d, gates, materialize=lambda s: s.localCheckpoint()
-    )
-    assert rep_one == rep_two
-    assert kept_one.count() == lazy_kept.count() == rep_two["after_gopher"]
+    (q_name, q), (g_name, g) = gates
+    row = d.agg(
+        F.count(F.lit(1)).alias("input"),
+        F.count(F.when(q, 1)).alias(q_name),
+        F.count(F.when(q & g, 1)).alias(g_name),
+    ).collect()[0]
+    survivors, counts = _scalar_pass(d, gates)
+    kept = survivors.localCheckpoint()
+    assert counts() == row.asDict()
+    assert kept.count() == row[g_name]
 
 
 def test_bf_slices_raises_on_out_of_window_index(spark):
