@@ -352,14 +352,18 @@ def _clean(args) -> int:
 
 def _infos(run_dir: str) -> int:
     """run_infos.txt analogue (task_scheduler.hpp:453-457): wall time,
-    per-stage lineage rows/checksums. Pure filesystem — no Spark."""
+    per-stage lineage rows/checksums and, for pipeline stages, their
+    status and start/end offsets (s) from the run start, which overlap
+    for the stages that run concurrently. Pure filesystem — no Spark."""
     import os
 
     out = {"run_dir": run_dir}
     ri = os.path.join(run_dir, "run_infos.json")
+    timing = {}
     if os.path.exists(ri):
         with open(ri) as f:
             out["run_infos"] = json.load(f)
+        timing = out["run_infos"].get("stages", {})
     stages = {}
     ldir = os.path.join(run_dir, "_lineage")
     if os.path.isdir(ldir):
@@ -370,6 +374,7 @@ def _infos(run_dir: str) -> int:
                 "output_rows": rec.get("output_rows"),
                 "checksum": rec.get("checksum"),
                 "partitions": len(rec.get("partitions") or {}) or None,
+                **timing.get(rec["stage"], {}),
             }
     out["stages"] = stages
     print(json.dumps(out))

@@ -13,7 +13,7 @@ lineage JSON, ``_lineage/<stage>.json``, with the fields
 * ``ts``, plus any caller extras (``curate_run`` adds its funnel report).
 
 A stage is *complete* iff its lineage exists, its params match, and its
-table is readable — `Pipeline.run` skips complete stages, which is
+table's write committed — `Pipeline.run` skips complete stages, which is
 exactly kill-and-rerun resumability.
 """
 
@@ -60,20 +60,17 @@ def read_lineage(run_dir: str, stage: str) -> dict | None:
 def stage_complete(
     spark: SparkSession, run_dir: str, stage: str, params: dict[str, Any]
 ) -> bool:
-    """Complete = lineage exists, params match, table readable — OR the
-    stage was explicitly cleaned with its lineage kept (`cli.py clean
-    --keep-lineage`, the reference's Eraser semantics: consumed stage
-    files are reclaimed and NOT regenerated on resume; a downstream
-    stage that still needs the table fails loudly at read)."""
+    """Complete = lineage exists, params match, and the table's write
+    committed (its ``_SUCCESS`` marker exists: a killed write leaves
+    none) — OR the stage was explicitly cleaned with its lineage kept
+    (`cli.py clean --keep-lineage`, the reference's Eraser semantics:
+    consumed stage files are reclaimed and NOT regenerated on resume; a
+    downstream stage that still needs the table fails loudly at read).
+    Filesystem checks only, no Spark job; ``spark`` stays in the
+    signature for existing callers."""
     rec = read_lineage(run_dir, stage)
     if rec is None:
         return False
     if {k: str(v) for k, v in rec["params"].items()} != {k: str(v) for k, v in params.items()}:
         return False
-    if rec.get("cleaned"):
-        return True
-    try:
-        spark.read.parquet(os.path.join(run_dir, stage)).schema
-        return True
-    except Exception:
-        return False
+    return bool(rec.get("cleaned")) or os.path.exists(os.path.join(run_dir, stage, "_SUCCESS"))

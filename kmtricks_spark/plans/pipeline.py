@@ -1,9 +1,14 @@
-"""Staged pipeline: extract/count -> histogram -> matrix/pa -> bloom.
+"""Staged pipeline: count, then histogram, matrix, pa and bloom at once.
 
 Mirrors `kmtricks pipeline` (task_scheduler.hpp:419-460, stages at
 §3.1 of SURVEY.md) with kmtricks' operational semantics:
 * every stage persists a parquet table + lineage JSON (resume = skip
   complete stages — the module-command story, cmd.hpp:74-272);
+* stages exchange data only through those tables, so after `counts` the
+  other four run concurrently from one driver-side pool, as kmtricks'
+  count and merge tasks share one task pool (task_pool.hpp:1-122);
+  matrix and pa wait for histogram only when `soft_min_quantile` derives
+  their thresholds from it;
 * `until` gates stages (--until, cli.cpp:265-273);
 * `restrict_to` processes a subset of partitions (--restrict-to,
   task_scheduler.hpp:121-160) — partition pruning on part_id;
@@ -13,11 +18,16 @@ Mirrors `kmtricks pipeline` (task_scheduler.hpp:419-460, stages at
 
 from __future__ import annotations
 
+import json
 import os
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from kmtricks_spark.config import KmConfig
 from kmtricks_spark.operators.bloom_stage import bf_concat, bf_slices, fpr_report, hash_counts
@@ -84,6 +94,10 @@ class Pipeline:
                         "repart_from": repart_from,
                         "restrict_samples": restrict_samples,
                         "export_bf": export_bf}
+        # matrix and pa's (merge cfg, samples), computed once by whichever
+        # of the two concurrent stages needs it first
+        self._merge_lock = threading.Lock()
+        self._merge = None
 
     # ---- helpers
 
@@ -205,12 +219,18 @@ class Pipeline:
     def _samples(self, counts: DataFrame) -> list[str]:
         return sorted(r.sample_id for r in counts.select("sample_id").distinct().collect())
 
+    def _merge_inputs(self, counts: DataFrame) -> tuple[KmConfig, list[str]]:
+        with self._merge_lock:
+            if self._merge is None:
+                self._merge = (self._merge_cfg(), self._samples(counts))
+            return self._merge
+
     def stage_matrix(self) -> bool:
         if self._done("matrix"):
             return False
         counts = self._restrict(read_stage(self.spark, self.run_dir, "counts"))
-        cfg = self._merge_cfg()
-        m = count_matrix(counts, self._samples(counts), cfg)
+        cfg, samples = self._merge_inputs(counts)
+        m = count_matrix(counts, samples, cfg)
         if self.plugin is not None:
             from kmtricks_spark.operators.plugin import apply_plugin
 
@@ -226,8 +246,8 @@ class Pipeline:
         if self._done("pa"):
             return False
         counts = self._restrict(read_stage(self.spark, self.run_dir, "counts"))
-        cfg = self._merge_cfg()
-        p = pa_matrix(counts, self._samples(counts), cfg)
+        cfg, samples = self._merge_inputs(counts)
+        p = pa_matrix(counts, samples, cfg)
         return self._finish("pa", write_stage(p, self.run_dir, "pa", partition_by=["part_id"]))
 
     def stage_bloom(self) -> bool:
@@ -262,25 +282,49 @@ class Pipeline:
         return self._finish("bloom", observed)
 
     def run(self) -> dict[str, str]:
-        """Execute stages in order, skipping complete ones; stop at
-        `until`. Returns {stage: 'done'|'skipped'}. Writes run_infos.json
-        (wall time + config — run_infos.txt analogue,
-        task_scheduler.hpp:453-457)."""
-        import json
-        import time
+        """Run `counts`, then the later stages up to `until` concurrently,
+        one pool thread each; every stage skips itself when complete.
+        Each pool job inherits the caller's Spark local properties (its
+        job group included). Waits for every stage, then re-raises the
+        first failure in STAGES order; stages that finished keep their
+        lineage. Returns {stage: 'done'|'skipped'} in STAGES order and
+        writes run_infos.json: wall time, per-stage status with start/end
+        offsets in seconds from the run start, and the config
+        (run_infos.txt analogue, task_scheduler.hpp:453-457)."""
+        t0 = time.perf_counter()
+        stages = STAGES[: STAGES.index(self.until) + 1] if self.until else STAGES
+        timing = {}
 
-        t0 = time.time()
-        status = {}
-        for stage in STAGES:
-            status[stage] = "done" if getattr(self, f"stage_{stage}")() else "skipped"
-            if self.until == stage:
-                break
+        def call(stage, after=None):
+            if after is not None:
+                after.result()
+            start = time.perf_counter() - t0
+            ran = getattr(self, f"stage_{stage}")()
+            timing[stage] = {"status": "done" if ran else "skipped",
+                             "start_s": round(start, 3),
+                             "end_s": round(time.perf_counter() - t0, 3)}
+
+        call("counts")
+        futures = {}
+        with ThreadPoolExecutor(len(STAGES) - 1, thread_name_prefix="stage") as pool:
+            for stage in stages[1:]:
+                after = None
+                if self.soft_min_quantile is not None and stage in ("matrix", "pa"):
+                    after = futures["histogram"]
+                # one wrapper per stage: each clones the caller's properties,
+                # so a job group one stage sets stays in its own thread
+                target = inheritable_thread_target(self.spark)(call)
+                futures[stage] = pool.submit(target, stage, after)
+        for fut in futures.values():
+            fut.result()
+        status = {stage: timing[stage]["status"] for stage in stages}
         os.makedirs(self.run_dir, exist_ok=True)
         with open(os.path.join(self.run_dir, "run_infos.json"), "w") as f:
             json.dump(
                 {
-                    "wall_sec": round(time.time() - t0, 3),
+                    "wall_sec": round(time.perf_counter() - t0, 3),
                     "status": status,
+                    "stages": {stage: timing[stage] for stage in stages},
                     "params": {k: str(v) for k, v in self._params.items()},
                     "spark": {
                         "version": self.spark.version,

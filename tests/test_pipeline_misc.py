@@ -36,9 +36,24 @@ def test_pipeline_end_to_end_and_resume(spark, sf_dir, run_dir):
     assert all(v == "done" for v in status.values()), status
     for stage in ("counts", "matrix", "pa", "bloom"):
         assert read_lineage(run_dir, stage)["output_rows"] > 0
-    # resume: everything skips
-    status2 = Pipeline(spark, CFG, run_dir, inp).run()
+    # resume: everything skips, and checking completeness starts no job
+    sc = spark.sparkContext
+    sc.setJobGroup("resume", "resume")
+    try:
+        status2 = Pipeline(spark, CFG, run_dir, inp).run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert all(v == "skipped" for v in status2.values()), status2
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    assert list(sc.statusTracker().getJobIdsForGroup("resume")) == []
+    # a table whose write never committed (no _SUCCESS) recomputes its
+    # stage alone, lineage kept or not
+    before = read_lineage(run_dir, "pa")["checksum"]
+    os.remove(os.path.join(run_dir, "pa", "_SUCCESS"))
+    status_pa = Pipeline(spark, CFG, run_dir, inp).run()
+    assert status_pa == {**dict.fromkeys(status2, "skipped"), "pa": "done"}
+    assert read_lineage(run_dir, "pa")["checksum"] == before
     # kill-after-stage: wipe matrix lineage -> only matrix reruns, output identical
     before = read_lineage(run_dir, "matrix")["checksum"]
     os.remove(os.path.join(run_dir, "_lineage", "matrix.json"))

@@ -28,12 +28,24 @@ def test_iceberg_adapter_fallback(spark, docs, tmp_path):
     assert read_table(spark, ref).count() == 10
 
 
-def test_run_infos_written(spark, sf_dir, tmp_path):
+def test_run_infos_written(spark, sf_dir, tmp_path, capsys):
     from kmtricks_spark.plans.pipeline import Pipeline
 
     cfg = KmConfig(k=8, hard_min=2, nb_partitions=4, bloom_bits=1 << 16)
     rd = str(tmp_path / "run")
-    Pipeline(spark, cfg, rd, os.path.join(sf_dir, "documents.parquet"), until="counts").run()
+    Pipeline(spark, cfg, rd, os.path.join(sf_dir, "documents.parquet"), until="pa").run()
     with open(os.path.join(rd, "run_infos.json")) as f:
         rec = json.load(f)
     assert rec["status"]["counts"] == "done" and rec["wall_sec"] > 0
+    # per-stage offsets from the run start: counts first, the rest after it
+    st = rec["stages"]
+    assert list(st) == ["counts", "histogram", "matrix", "pa"]
+    assert {s["status"] for s in st.values()} == {"done"}
+    for s in st.values():
+        assert 0 <= s["start_s"] <= s["end_s"] <= rec["wall_sec"]
+    assert all(st[s]["start_s"] >= st["counts"]["end_s"] for s in ("histogram", "matrix", "pa"))
+    from kmtricks_spark.cli import main
+
+    main(["infos", "--run-dir", rd])
+    info = json.loads(capsys.readouterr().out)
+    assert info["stages"]["matrix"]["end_s"] == st["matrix"]["end_s"]
