@@ -254,44 +254,6 @@ def bench_queries(spark) -> dict[str, float]:
     return out
 
 
-def bench_skew(spark) -> dict:
-    """Static vs sampled partitioner on a Zipf-skewed corpus — committed
-    evidence for the load-bearing scale feature (R2). The corpus is the
-    sf documents table plus a heavy head (the first 8 docs replicated
-    SKEW_REP times -> a few hundred kgrams carry ~half the instance
-    mass, the web-text shape). Reports wall time (sampled INCLUDES its
-    sampling pre-pass — that cost is part of the operator) and the
-    per-partition instance-mass imbalance (max/mean; 1.0 = perfect)."""
-    from kmtricks_spark.operators.partitioner import partition_balance
-
-    skew_rep = int(os.environ.get("BENCH_SKEW_REP", "400"))
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    hot = (
-        docs.where(F.col("doc_id") < 8)
-        .withColumn("rep", F.explode(F.sequence(F.lit(1), F.lit(skew_rep))))
-        .withColumn("doc_id", F.col("doc_id") + F.col("rep").cast("long") * 20_000_000)
-        .drop("rep")
-    )
-    corpus = (
-        docs.unionByName(hot)
-        .repartition(spark.sparkContext.defaultParallelism * 2)
-        .cache()
-    )
-    corpus.count()  # materialize off the clock
-    out = {}
-    for mode in ("static", "sampled"):
-        cfg = CFG.with_(repartition_type=mode, nb_partitions=32)
-        sec = _timed(
-            lambda: count_kgrams(corpus, cfg).agg(F.sum("count"), F.count(F.lit(1))).collect()
-        )
-        bal = partition_balance(
-            count_kgrams(corpus, cfg), weight_col="count"
-        ).collect()[0]
-        out[mode] = {"sec": round(sec, 3), "imbalance": round(bal["imbalance"], 3)}
-    corpus.unpersist()
-    return out
-
-
 def _scale_child(n: int, rep: int) -> None:
     """Subprocess body: one pinned parallelism level, prints best seconds
     AND the same-window pure-JVM kernel time.
@@ -407,7 +369,6 @@ def main():
     k_start = kernel_sec(spark)
     queries = {k: round(v, 3) for k, v in bench_queries(spark).items()}
     k_end = kernel_sec(spark)
-    skew = bench_skew(spark) if os.environ.get("BENCH_SKEW", "1") != "0" else None
     spark.stop()
 
     headline = shingles / queries["count_pipeline"]
@@ -426,8 +387,6 @@ def main():
         # degraded hypervisor window as a 1.5-2x code regression
         "kernel": {"start_sec": round(k_start, 3), "end_sec": round(k_end, 3)},
     }
-    if skew is not None:
-        result["skew_partitioner"] = skew
     if os.environ.get("BENCH_SCALING", "1") != "0":
         result["scaling"] = scaling_run(REPLICATE)
     print(json.dumps(result))

@@ -1,7 +1,8 @@
 """spark-submit entry point mirroring the reference CLI.
 
-Subcommands ≙ src/cli.cpp:26-54: pipeline, repart, count, merge,
-aggregate, combine, filter, dump — plus `bench`. Run as:
+Subcommands ≙ src/cli.cpp:26-54: pipeline, one per stage (counts,
+histogram, matrix, pa, bloom), aggregate, combine, filter, dump, infos —
+plus clean and curate. Run as:
 
     spark-submit --py-files kmtricks_spark.zip -m kmtricks_spark.cli \
         pipeline --input pages.parquet --run-dir /tmp/run1 --kmer-size 8 \
@@ -22,7 +23,6 @@ from kmtricks_spark.config import KmConfig, get_spark
 def _cfg_from(args) -> KmConfig:
     return KmConfig(
         k=args.kmer_size,
-        m=args.minimizer_size,
         nb_partitions=args.nb_partitions,
         hard_min=args.hard_min,
         soft_min=args.soft_min,
@@ -33,14 +33,12 @@ def _cfg_from(args) -> KmConfig:
         bloom_bits=args.bloom_size,
         bfc_width=args.bitw,
         bloom_mode=args.bloom_mode,
-        repartition_type=args.repartition,
     )
 
 
 def _add_common(p):
     p.add_argument("--run-dir", required=True)
     p.add_argument("--kmer-size", type=int, default=8)
-    p.add_argument("--minimizer-size", type=int, default=4)
     p.add_argument("--nb-partitions", type=int, default=32,
                    help="0 = auto from input size (R1, task.hpp:112-115)")
     p.add_argument("--hard-min", type=int, default=2)
@@ -61,10 +59,6 @@ def _add_common(p):
                    help="also write one standalone BF file per sample "
                         "(howdesbt = reference bffileheader layout, "
                         "howde_utils.hpp:56-122)")
-    p.add_argument("--repartition", choices=["static", "sampled"], default="static",
-                   help="R3 static hash vs R2 sampled LPT map (task.hpp:183-199)")
-    p.add_argument("--repart-from", type=str, default=None,
-                   help="reuse a saved partitioner.json (compat-checked)")
     p.add_argument("--restrict-to-list", type=str, default=None,
                    help="comma-separated partition ids")
     p.add_argument("--restrict-to", type=float, default=None,
@@ -104,10 +98,6 @@ def main(argv=None):
         if stage == "matrix":
             _add_plugin_flags(sp)
         sp.add_argument("--input", required=False)
-
-    rp = sub.add_parser("repart", help="build + persist the sampled partitioner only (cli.cpp repart)")
-    _add_common(rp)
-    rp.add_argument("--input", required=True)
 
     info = sub.add_parser("infos", help="print run_infos + per-stage lineage summary")
     info.add_argument("--run-dir", required=True)
@@ -220,20 +210,6 @@ def main(argv=None):
             if not inp:
                 raise SystemExit("--nb-partitions 0 (auto) needs --input")
             args.nb_partitions = auto_partitions(spark, inp)
-        if args.cmd == "repart":
-            from kmtricks_spark.operators.partitioner import (
-                sample_kgram_hot_map,
-                save_partitioner,
-            )
-            import os
-
-            cfg = _cfg_from(args)
-            hot = sample_kgram_hot_map(spark.read.parquet(args.input), cfg)
-            os.makedirs(args.run_dir, exist_ok=True)
-            out = os.path.join(args.run_dir, "partitioner.json")
-            save_partitioner(out, hot, cfg.k, cfg.m, cfg.nb_partitions)
-            print(json.dumps({"repart": "done", "path": out, "hot_keys": len(hot)}))
-            return 0
         if args.cmd == "dump":
             df = spark.read.parquet(f"{args.run_dir}/{args.stage}")
             df.show(args.limit, truncate=False)
@@ -306,7 +282,6 @@ def main(argv=None):
             until=(args.cmd if args.cmd != "pipeline" else args.until),
             restrict_to=restrict,
             soft_min_quantile=args.soft_min_quantile,
-            repart_from=args.repart_from,
             restrict_samples=samples,
             export_bf=args.export_filters,
             plugin=plugin_fn,
@@ -403,12 +378,10 @@ def _post_op(spark, args) -> int:
     elif args.cmd == "combine":
         la, lb = read_lineage(args.run_dir, "matrix"), read_lineage(args.other, "matrix")
         if la and lb:
-            check_repart_compat(
-                la["params"], lb["params"], dir_a=args.run_dir, dir_b=args.other
-            )
+            check_repart_compat(la["params"], lb["params"])
         elif not args.allow_missing_lineage:
             # the reference refuses runs it cannot validate (task.hpp:
-            # 136-147); silently skipping the check would let k/m/P
+            # 136-147); silently skipping the check would let k/P
             # mismatches merge
             missing = args.run_dir if la is None else args.other
             raise SystemExit(

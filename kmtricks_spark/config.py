@@ -25,13 +25,11 @@ class KmConfig:
 
     Reference flags: --kmer-size (cli.cpp:131), --hard-min (cli.cpp:137),
     --soft-min (cli.cpp:228), --recurrence-min (cli.cpp:250),
-    --share-min (cli.cpp:256), --minimizer-size (cli.cpp:277),
-    --nb-partitions (cli.cpp:295), --bloom-size (cli.cpp:334),
-    --bitw (cli.cpp:350).
+    --share-min (cli.cpp:256), --nb-partitions (cli.cpp:295),
+    --bloom-size (cli.cpp:334), --bitw (cli.cpp:350).
     """
 
     k: int = 8                    # shingle width in BYTES (ref default 31 for DNA)
-    m: int = 4                    # minimizer width in bytes (ref default 10)
     nb_partitions: int = 32       # P; ref floor is 4 (task.hpp:112-115)
     hard_min: int = 2             # drop counts < hard_min at count time
     soft_min: int = 2             # scalar per-sample solidity threshold
@@ -48,7 +46,6 @@ class KmConfig:
     sample_col: str = "source"
     kgram_as_string: bool = True  # decode shingles to str (ASCII corpora) vs keep bytes
     alphabet: str | None = None   # None (text) | "dna" (canonical k-mers, ref parity)
-    repartition_type: str = "static"  # static | sampled (R2/R3, task.hpp:183-199)
 
     @property
     def window_bits(self) -> int:
@@ -138,15 +135,3 @@ def auto_partitions(
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Register the driver's parquet tables as temp views; return dict of DFs."""
-    out = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

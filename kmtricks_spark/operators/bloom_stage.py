@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from kmtricks_spark.config import KmConfig
-from kmtricks_spark.functions.hashing import windowed_hash_col
+from kmtricks_spark.functions.hashing import part_id_col, windowed_hash_col
 from kmtricks_spark.sketches import bloom
 
 
@@ -225,15 +225,12 @@ def fpr_report(slices: DataFrame, cfg: KmConfig) -> DataFrame:
     )
 
 
-def bf_probe(
-    slices: DataFrame, probes: DataFrame, cfg: KmConfig, hot_map: dict | None = None
-) -> DataFrame:
+def bf_probe(slices: DataFrame, probes: DataFrame, cfg: KmConfig) -> DataFrame:
     """Distributed membership probe: (sample_id, kgram) rows against the
-    per-(partition, sample) slices. The probe must route each kgram with
-    the SAME part assignment the build used — pass the build's hot_map
-    when the slices came from a sampled-repartition run, else the static
-    hash applies. Joins on (part_id, sample_id); a vectorized bit check
-    reads the window bitmap. Returns (sample_id, kgram, member int).
+    per-(partition, sample) slices. Each kgram is routed by the same
+    static hash the build used (part_id_col). Joins on (part_id,
+    sample_id); a vectorized bit check reads the window bitmap. Returns
+    (sample_id, kgram, member int).
 
     Bloom guarantee under test: member == 1 for every key that was
     inserted (no false negatives) — which makes present-key probes
@@ -245,21 +242,10 @@ def bf_probe(
     all of that group's probe bits with the vectorized contains_local
     kernel. No per-row Python, and the bitmap is never replicated onto
     probe rows the way a plain join would."""
-    from kmtricks_spark.functions.hashing import part_id_col
-    from kmtricks_spark.operators.partitioner import skew_aware_part
-
     w = cfg.window_bits
-    base = probes.select("sample_id", "kgram")
-    if hot_map:
-        if any(len(ps) != 1 for ps in hot_map.values()):
-            raise ValueError(
-                "bf_probe needs a single-partition-per-key map (the count "
-                "path's allow_split=False form): a split key's bit could "
-                "be in any of its windows"
-            )
-        routed = skew_aware_part(base, "kgram", cfg.nb_partitions, hot_map=hot_map)
-    else:
-        routed = base.withColumn("part_id", part_id_col(F.col("kgram"), cfg.nb_partitions))
+    routed = probes.select(
+        "sample_id", "kgram", part_id_col(F.col("kgram"), cfg.nb_partitions)
+    )
     # the SAME hash expression the build side used (hash_counts), so a
     # seed/formula change can never silently diverge build vs probe:
     # local index = windowed hash minus the window anchor

@@ -24,25 +24,16 @@ from kmtricks_spark.functions.hashing import part_id_col
 from kmtricks_spark.functions.shingles import kgrams_sql
 
 
-def count_kgrams(df: DataFrame, cfg: KmConfig, hot_map: dict | None = None) -> DataFrame:
+def count_kgrams(df: DataFrame, cfg: KmConfig) -> DataFrame:
     """Exact counts: (part_id, sample_id, kgram, count), count >= hard_min.
 
     Shingles explode in the JVM (kgrams_sql; bytes mode unless
     kgram_as_string) and Spark's partial aggregation pre-counts them
     map-side — the super-k-mer shuffle compression of the reference.
 
-    Partitioning (R2/R3): part_id is static xxhash64(kgram)%P by default.
-    With cfg.repartition_type='sampled' (or an explicit hot_map), the top
-    sampled kgrams are routed by an LPT-balanced map (reference default,
-    task.hpp:183-199) and only the long tail falls back to static hash —
-    the map is broadcast, never a literal plan. Count VALUES are identical
-    either way; only partition placement changes.
+    Partitioning (R3): part_id = xxhash64(kgram) % P, attached after the
+    aggregate, so it places rows without changing what counting costs.
     """
-    from kmtricks_spark.operators.partitioner import (
-        sample_kgram_hot_map,
-        skew_aware_part,
-    )
-
     shingles = kgrams_sql(df, cfg, bytes_mode=not cfg.kgram_as_string)
     if cfg.alphabet == "dna":
         from kmtricks_spark.functions.dna import canonicalize_kgrams
@@ -51,14 +42,7 @@ def count_kgrams(df: DataFrame, cfg: KmConfig, hot_map: dict | None = None) -> D
     counts = shingles.groupBy("sample_id", "kgram").agg(
         F.count(F.lit(1)).alias("count")
     )
-    if hot_map is None and cfg.repartition_type == "sampled":
-        hot_map = sample_kgram_hot_map(df, cfg)
-    if hot_map:
-        counts = skew_aware_part(counts, "kgram", cfg.nb_partitions, hot_map=hot_map)
-    else:
-        counts = counts.withColumn(
-            "part_id", part_id_col(F.col("kgram"), cfg.nb_partitions)
-        )
+    counts = counts.withColumn("part_id", part_id_col(F.col("kgram"), cfg.nb_partitions))
     counts = counts.where(F.col("count") >= cfg.hard_min)
     if cfg.max_count:
         counts = counts.withColumn(

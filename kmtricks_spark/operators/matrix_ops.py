@@ -18,58 +18,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def check_repart_compat(
-    params_a: dict, params_b: dict, dir_a: str | None = None, dir_b: str | None = None
-) -> None:
+def check_repart_compat(params_a: dict, params_b: dict) -> None:
     """Combine/filter require both runs to share the partitioning config
-    — the reference refuses otherwise (task.hpp:136-147). Beyond k/m/P,
-    the PLACEMENT provenance must agree: a sampled run's part_ids follow
-    its hot map, so mixing it with a static run (or a differently-sampled
-    one) silently violates the one-partition-per-kgram invariant for
-    downstream bloom/restrict consumers. Two sampled runs are compatible
-    only when they demonstrably share one map: equal --repart-from
-    realpaths, one side's repart_from resolving to the other run's own
-    partitioner.json, or byte-identical partitioner.json contents (runs
-    that each copied the same source map)."""
-    import hashlib
-    import os
-
-    for key in ("k", "m", "nb_partitions", "repartition_type"):
+    — the reference refuses otherwise (task.hpp:136-147): equal k and P,
+    so part_id = XXH64(kgram) % P places every kgram alike in both runs.
+    A run whose lineage records ``repartition_type: sampled`` (written by
+    an earlier version) placed its hot kgrams by a sampled map this
+    version no longer reads, so it is refused too."""
+    for params in (params_a, params_b):
+        if str(params.get("repartition_type")) == "sampled":
+            raise ValueError(
+                "incompatible runs: a run records repartition_type='sampled'; "
+                "its part_ids follow a sampled map — recompute it"
+            )
+    for key in ("k", "nb_partitions"):
         if str(params_a.get(key)) != str(params_b.get(key)):
             raise ValueError(
                 f"incompatible runs: {key}={params_a.get(key)!r} vs {params_b.get(key)!r}"
-            )
-    if str(params_a.get("repartition_type")) == "sampled":
-        def own_map(d):
-            return os.path.realpath(os.path.join(d, "partitioner.json")) if d else None
-
-        def content_hash(p):
-            try:
-                with open(p, "rb") as f:
-                    return hashlib.md5(f.read()).hexdigest()
-            except (OSError, TypeError):
-                return None
-
-        ra, rb = params_a.get("repart_from"), params_b.get("repart_from")
-        ra = os.path.realpath(str(ra)) if ra and str(ra) != "None" else None
-        rb = os.path.realpath(str(rb)) if rb and str(rb) != "None" else None
-        # effective map of each run: its own copy if present, else its
-        # repart_from source (repart-from runs copy the map into their run
-        # dir now, but older runs may predate that)
-        ma = own_map(dir_a) if dir_a and os.path.exists(own_map(dir_a)) else ra
-        mb = own_map(dir_b) if dir_b and os.path.exists(own_map(dir_b)) else rb
-        ha, hb = content_hash(ma), content_hash(mb)
-        shared = (
-            (ra is not None and ra == rb)
-            or (rb is not None and rb == own_map(dir_a))
-            or (ra is not None and ra == own_map(dir_b))
-            or (ha is not None and ha == hb)
-        )
-        if not shared:
-            raise ValueError(
-                "incompatible runs: both are 'sampled' but do not share a "
-                "hot map — re-run one with --repart-from pointing at the "
-                f"other's partitioner.json (got {ra!r} vs {rb!r})"
             )
 
 

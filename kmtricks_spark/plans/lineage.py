@@ -26,6 +26,8 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
+from kmtricks_spark.sources.pages import SCHEMA_FILE
+
 LINEAGE_DIR = "_lineage"
 
 
@@ -61,16 +63,21 @@ def stage_complete(
     spark: SparkSession, run_dir: str, stage: str, params: dict[str, Any]
 ) -> bool:
     """Complete = lineage exists, params match, and the table's write
-    committed (its ``_SUCCESS`` marker exists: a killed write leaves
-    none) — OR the stage was explicitly cleaned with its lineage kept
-    (`cli.py clean --keep-lineage`, the reference's Eraser semantics:
-    consumed stage files are reclaimed and NOT regenerated on resume; a
-    downstream stage that still needs the table fails loudly at read).
-    Filesystem checks only, no Spark job; ``spark`` stays in the
-    signature for existing callers."""
+    committed: its ``_SUCCESS`` marker exists (a killed write leaves
+    none) and so does the read schema ``write_stage`` records after the
+    commit (a table written without one recomputes rather than fail at
+    ``read_stage``) — OR the stage was explicitly cleaned with its
+    lineage kept (`cli.py clean --keep-lineage`, the reference's Eraser
+    semantics: consumed stage files are reclaimed and NOT regenerated on
+    resume; a downstream stage that still needs the table fails loudly
+    at read). Filesystem checks only, no Spark job; ``spark`` stays in
+    the signature for existing callers."""
     rec = read_lineage(run_dir, stage)
     if rec is None:
         return False
     if {k: str(v) for k, v in rec["params"].items()} != {k: str(v) for k, v in params.items()}:
         return False
-    return bool(rec.get("cleaned")) or os.path.exists(os.path.join(run_dir, stage, "_SUCCESS"))
+    table = os.path.join(run_dir, stage)
+    return bool(rec.get("cleaned")) or all(
+        os.path.exists(os.path.join(table, name)) for name in ("_SUCCESS", SCHEMA_FILE)
+    )

@@ -49,7 +49,6 @@ class Pipeline:
         until: str | None = None,
         restrict_to: list[int] | None = None,
         soft_min_quantile: float | None = None,
-        repart_from: str | None = None,
         restrict_samples: list[str] | None = None,
         export_bf: str | None = None,
         plugin=None,
@@ -64,24 +63,12 @@ class Pipeline:
                 "counting cells) — silently skipping the export would be "
                 "worse than refusing"
             )
-        if repart_from:
-            # realpath at construction: a relative path stored in lineage
-            # would resolve against a DIFFERENT cwd at combine time and
-            # defeat the shared-map identity check
-            repart_from = os.path.realpath(repart_from)
-            # placement provenance: part_ids of this run follow the loaded
-            # sampled map, so the run IS 'sampled' regardless of the CLI
-            # default — recording 'static' would let check_repart_compat
-            # wrongly combine it with a genuinely static run (and refuse
-            # the very run whose map it reuses)
-            cfg = cfg.with_(repartition_type="sampled")
         self.spark, self.cfg, self.run_dir = spark, cfg, run_dir
         self.input_path = input_path
         self.until = until
         self.restrict_to = restrict_to
         self.restrict_samples = restrict_samples
         self.soft_min_quantile = soft_min_quantile
-        self.repart_from = repart_from
         self.export_bf = export_bf
         # the callable never enters lineage params — the SPEC string does
         # (matrix stage only, via _stage_params): a resume with a
@@ -91,7 +78,6 @@ class Pipeline:
         self.plugin = plugin
         self._plugin_spec = plugin_spec
         self._params = {**asdict(cfg), "input": input_path, "restrict": restrict_to,
-                        "repart_from": repart_from,
                         "restrict_samples": restrict_samples,
                         "export_bf": export_bf}
         # matrix and pa's (merge cfg, samples), computed once by whichever
@@ -137,42 +123,10 @@ class Pipeline:
 
     # ---- stages
 
-    def _hot_map(self) -> dict | None:
-        """Resolve the sampled-repartition map: reuse (--repart-from or a
-        prior run of this run_dir) with a k/m/P compat check, else sample
-        once and persist it to <run_dir>/partitioner.json (the reference's
-        repartition_storage reuse, task.hpp:136-147,209-222)."""
-        from kmtricks_spark.operators.partitioner import (
-            load_partitioner,
-            sample_kgram_hot_map,
-            save_partitioner,
-        )
-
-        cfg = self.cfg
-        own_path = os.path.join(self.run_dir, "partitioner.json")
-        if self.repart_from:
-            hot_map = load_partitioner(self.repart_from, cfg.k, cfg.m, cfg.nb_partitions)
-            if os.path.realpath(own_path) != self.repart_from:
-                # keep a copy in the run dir (the reference RepartTask's
-                # fs::copy of repartition_gatb) so this run's own
-                # partitioner.json resolves in later compat checks even if
-                # the source run is deleted
-                os.makedirs(self.run_dir, exist_ok=True)
-                save_partitioner(own_path, hot_map, cfg.k, cfg.m, cfg.nb_partitions)
-            return hot_map
-        if cfg.repartition_type != "sampled":
-            return None
-        if os.path.exists(own_path):  # resume: reuse this run's own map
-            return load_partitioner(own_path, cfg.k, cfg.m, cfg.nb_partitions)
-        hot_map = sample_kgram_hot_map(self._input(), cfg)
-        os.makedirs(self.run_dir, exist_ok=True)
-        save_partitioner(own_path, hot_map, cfg.k, cfg.m, cfg.nb_partitions)
-        return hot_map
-
     def stage_counts(self) -> bool:
         if self._done("counts"):
             return False
-        counts = count_kgrams(self._input(), self.cfg, hot_map=self._hot_map())
+        counts = count_kgrams(self._input(), self.cfg)
         return self._finish(
             "counts", write_stage(counts, self.run_dir, "counts", partition_by=["part_id"])
         )

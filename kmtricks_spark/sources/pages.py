@@ -18,10 +18,14 @@ applicable — the columnar replacement for kmtricks' binary record streams
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+SCHEMA_FILE = "_schema.json"  # a stage table's read schema, next to its parquet
 
 
 def extract_text(df: DataFrame) -> DataFrame:
@@ -63,6 +67,27 @@ def load_pages(
     return out.select("url", "sample_id", "text", *(["lang"] if "lang" in cols else []))
 
 
+def _nullable(t: DataType) -> DataType:
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _read_schema(schema: StructType, partition_by: list[str]) -> StructType:
+    """The schema a parquet read of the written table infers: the data
+    columns in order, then the partition columns, everything nullable.
+    Partition columns keep their written type; the only one used,
+    part_id, is an int, which is also the type inference picks."""
+    data = [f for f in schema.fields if f.name not in partition_by]
+    return _nullable(StructType(data + [schema[c] for c in partition_by]))
+
+
 def write_stage(
     df: DataFrame, run_dir: str, stage: str, partition_by: list[str] | None = None
 ) -> dict:
@@ -75,7 +100,11 @@ def write_stage(
     ``partitions``, the
     sorted part ids written, or None for a table not partitioned by
     part_id. The hash sees the same values a read-back would: part_id is
-    an int column, which is also the type parquet infers for it."""
+    an int column, which is also the type parquet infers for it.
+
+    After the parquet commit, the table's read schema goes to
+    ``<stage>/_schema.json`` (Spark's readers skip ``_`` files), so
+    ``read_stage`` starts no schema-inference job."""
     checksum = F.sum(F.xxhash64(*[F.col(c) for c in sorted(df.columns)]) % F.lit(2**31))
     metrics = [
         F.count(F.lit(1)).alias("output_rows"),
@@ -87,9 +116,16 @@ def write_stage(
     w = df.observe(obs, *metrics).write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.parquet(os.path.join(run_dir, stage))
+    path = os.path.join(run_dir, stage)
+    w.parquet(path)
+    with open(os.path.join(path, SCHEMA_FILE), "w") as f:
+        f.write(_read_schema(df.schema, partition_by or []).json())
     return {"partitions": None, **obs.get}
 
 
 def read_stage(spark: SparkSession, run_dir: str, stage: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(run_dir, stage))
+    """Read a table ``write_stage`` wrote, with its recorded schema."""
+    path = os.path.join(run_dir, stage)
+    with open(os.path.join(path, SCHEMA_FILE)) as f:
+        schema = StructType.fromJson(json.load(f))
+    return spark.read.schema(schema).parquet(path)

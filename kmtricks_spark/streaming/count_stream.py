@@ -3,23 +3,15 @@
 The reference is strictly batch (SURVEY §2.6); streaming is a
 north-rule-era addition for continuously-arriving page crawls. The same
 logical plan (shingle -> count) runs over readStream sources; HLL
-registers are a native streaming max aggregate, and the windowed event
-aggregation shows watermarked late-data handling.
+registers are a native streaming max aggregate, and the CMS payload is
+Spark-managed state.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
 from kmtricks_spark.config import KmConfig
 from kmtricks_spark.functions.shingles import kgrams_sql
@@ -32,17 +24,6 @@ DOCS_SCHEMA = StructType(
         StructField("lang", StringType()),
         StructField("source", StringType()),
         StructField("n_chars", LongType()),
-    ]
-)
-
-EVENTS_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
     ]
 )
 
@@ -59,18 +40,6 @@ def streaming_counts(docs: DataFrame, cfg: KmConfig) -> DataFrame:
     """Continuous shingle counting (update-mode aggregate state)."""
     shingles = kgrams_sql(docs, cfg)
     return shingles.groupBy("sample_id", "kgram").agg(F.count(F.lit(1)).alias("count"))
-
-
-def windowed_event_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Watermarked tumbling-window counts over an event-time stream."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("win.start").alias("win_start"), "event_type", "n")
-    )
 
 
 def stateful_streaming_hll(docs: DataFrame, cfg: KmConfig, p: int = 12) -> DataFrame:

@@ -16,6 +16,7 @@ import kmtricks_spark.plans.pipeline as pipeline_mod
 from kmtricks_spark import KmConfig
 from kmtricks_spark.plans.lineage import read_lineage
 from kmtricks_spark.plans.pipeline import STAGES, Pipeline
+from kmtricks_spark.sources.pages import SCHEMA_FILE, read_stage
 
 CFG = KmConfig(k=8, hard_min=2, soft_min=2, nb_partitions=8, bloom_bits=1 << 18)
 CURATE_GATES = dict(min_quality=0.5, gopher=True, dedup="minhash", min_jaccard=0.8)
@@ -24,7 +25,6 @@ LINEAGE_KEYS = ("output_rows", "checksum", "partitions")
 VARIANTS = {
     "plain": (CFG, {}),
     "restrict": (CFG, {"restrict_to": [0, 3, 5]}),
-    "sampled": (CFG.with_(repartition_type="sampled"), {}),
     "quantile": (CFG.with_(soft_min=1), {"soft_min_quantile": 0.9}),
 }
 
@@ -81,13 +81,12 @@ def no_job_lineage(spark, monkeypatch):
     return calls
 
 
-@pytest.mark.parametrize("variant", ["plain", "restrict", "sampled"])
+@pytest.mark.parametrize("variant", ["plain", "restrict"])
 def test_pipeline_lineage_equals_read_back(spark, sf_dir, tmp_path, no_job_lineage, variant):
     inp = os.path.join(sf_dir, "documents.parquet")
-    cfg = CFG.with_(repartition_type="sampled") if variant == "sampled" else CFG
     restrict = [0, 3, 5] if variant == "restrict" else None
     rd = str(tmp_path / variant)
-    status = Pipeline(spark, cfg, rd, inp, restrict_to=restrict).run()
+    status = Pipeline(spark, CFG, rd, inp, restrict_to=restrict).run()
     assert all(v == "done" for v in status.values()), status
     # matrix, pa and bloom run concurrently: their order is not fixed
     assert sorted(no_job_lineage, key=lambda c: c[0]) == [(stage, set()) for stage in sorted(STAGES)]
@@ -111,6 +110,42 @@ def test_curate_run_lineage_equals_read_back(spark, sf_dir, tmp_path, no_job_lin
         _assert_lineage_matches_table(spark, rd, stage)
     assert read_lineage(rd, "dedup")["output_rows"] == rep["after_dedup"]
     assert read_lineage(rd, "decontam")["output_rows"] == rep["after_decontam"]
+
+
+def test_read_stage_schema_equals_inferring_read(spark, sf_dir, tmp_path):
+    """Every table a Pipeline or curate_run writes records its read
+    schema, and read_stage returns the names, order, types and
+    nullability an inferring read finds, without starting a job."""
+    from kmtricks_spark.operators.curation import curate_run
+
+    inp = os.path.join(sf_dir, "documents.parquet")
+    bench = str(tmp_path / "bench.parquet")
+    spark.read.parquet(inp).orderBy("doc_id").limit(5).select("text").write.parquet(bench)
+    runs = [str(tmp_path / name) for name in ("bounded", "bfc", "crun")]
+    Pipeline(spark, CFG.with_(hist_upper=50), runs[0], inp).run()
+    Pipeline(spark, CFG.with_(bloom_mode="bfc"), runs[1], inp).run()
+    curate_run(spark, runs[2], inp, decontaminate_path=bench, max_dup_coverage=0.5,
+               max_docs_per_domain=50, url_col="source", **CURATE_GATES)
+    sc = spark.sparkContext
+    checked = set()
+    for rd in runs:
+        tables = sorted(t for t in os.listdir(rd)
+                        if os.path.exists(os.path.join(rd, t, "_SUCCESS")))
+        for t in tables:
+            assert os.path.exists(os.path.join(rd, t, SCHEMA_FILE)), (rd, t)
+            inferred = spark.read.parquet(os.path.join(rd, t)).schema
+            sc.setJobGroup("read-stage", "read-stage")
+            try:
+                got = read_stage(spark, rd, t).schema
+            finally:
+                for k in GROUP_PROPS:
+                    sc.setLocalProperty(k, None)
+            assert got == inferred, (rd, t)
+            checked.add(t)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    assert list(sc.statusTracker().getJobIdsForGroup("read-stage")) == []
+    assert checked >= {*STAGES, "histogram_oob", "merge_stats", "bloom_filters", "fpr",
+                       "scalar", "domain", "dedup", "span", "decontam"}
 
 
 def test_resume_with_new_soft_min_quantile_recomputes_merge(spark, sf_dir, tmp_path):

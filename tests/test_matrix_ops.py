@@ -59,3 +59,12 @@ def test_repart_compat():
         check_repart_compat(ok, {**ok, "nb_partitions": 64})
     with pytest.raises(ValueError):
         check_repart_compat(ok, {**ok, "k": 9})
+    # lineage of the removed sampled placement: static runs (and their
+    # unused minimizer width) still combine, a sampled one on either side
+    # is refused, since its part_ids follow a map no longer read
+    check_repart_compat({"k": 8, "nb_partitions": 32}, {**ok, "repartition_type": "static"})
+    sampled = {**ok, "repartition_type": "sampled"}
+    for a, b in ((ok, sampled), (sampled, ok)):
+        with pytest.raises(ValueError, match="sampled"):
+            check_repart_compat(a, b)
+

@@ -1,4 +1,4 @@
-"""Pipeline resume/lineage, partitioner, fof parsing, howde sink,
+"""Pipeline resume/lineage, salting, fof parsing, howde sink,
 streaming, multimodal plumbing."""
 
 import json
@@ -9,13 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kmtricks_spark import KmConfig
-from kmtricks_spark.operators.partitioner import (
-    build_balanced_map,
-    partition_balance,
-    skew_aware_part,
-    static_part,
-    two_level_count,
-)
+from kmtricks_spark.operators.partitioner import two_level_count
 from kmtricks_spark.plans.lineage import read_lineage
 from kmtricks_spark.plans.pipeline import Pipeline
 from kmtricks_spark.sources.fof import parse_fof, soft_min_overrides
@@ -167,38 +161,6 @@ def test_param_change_invalidates(spark, sf_dir, run_dir):
     status = Pipeline(spark, CFG.with_(soft_min=3), run_dir, inp, until="counts").run()
     # counts params unchanged except soft_min (part of params dict) -> rerun
     assert status["counts"] == "done"
-
-
-def test_static_vs_skew_partitioner_balance(spark):
-    # Zipfian keys: static hash puts the hot key in one partition;
-    # the sampled map must spread load better
-    n = 20000
-    rows = [(i, f"k{min(int(np.random.default_rng(i).zipf(1.3)), 50)}") for i in range(n)]
-    df = spark.createDataFrame(rows, ["i", "key"])
-    stat = partition_balance(static_part(df, "key", 8)).collect()[0]
-    skew = partition_balance(skew_aware_part(df, "key", 8, fraction=0.5)).collect()[0]
-    assert skew["imbalance"] <= stat["imbalance"] + 1e-9
-    assert skew["imbalance"] < 1.5  # hot keys split across partitions
-
-
-def test_skew_part_deterministic(spark):
-    df = spark.createDataFrame([(i, f"k{i % 17}") for i in range(1000)], ["i", "key"])
-    a = skew_aware_part(df, "key", 8, fraction=1.0).select("i", "key", "part_id")
-    b = skew_aware_part(df, "key", 8, fraction=1.0).select("i", "key", "part_id")
-    assert a.exceptAll(b).count() == 0
-
-
-def test_balanced_map_spreads_hot_keys():
-    hot = [(f"k{i}", 1000 // (i + 1)) for i in range(20)]
-    m = build_balanced_map(hot, 4)
-    loads = [0.0] * 4
-    w = dict(hot)
-    for k, ps in m.items():
-        for p in ps:
-            loads[p] += w[k] / len(ps)
-    assert max(loads) / (sum(loads) / 4) < 1.5
-    # the dominant key must be split
-    assert len(m["k0"]) > 1
 
 
 def test_two_level_count_equals_plain(spark):

@@ -1,12 +1,10 @@
-"""Plugin hook (J7), partitioner persistence (R4), streaming HLL."""
+"""Plugin hook (J7), streaming HLL."""
 
 import os
 
 import numpy as np
-import pytest
 
 from kmtricks_spark import KmConfig
-from kmtricks_spark.operators.partitioner import load_partitioner, save_partitioner
 from kmtricks_spark.operators.plugin import apply_plugin, min_total_plugin
 
 
@@ -21,16 +19,6 @@ def test_plugin_custom_transformless_filter(spark):
     m = spark.createDataFrame([(0, "aa", [1]), (0, "ab", [1])], ["part_id", "kgram", "counts"])
     kept = {r.kgram for r in apply_plugin(m, lambda kg, c: np.char.startswith(kg.astype(str), "aa")).collect()}
     assert kept == {"aa"}
-
-
-def test_partitioner_save_load(tmp_path):
-    p = str(tmp_path / "repart.json")
-    save_partitioner(p, {"k1": [0, 2], "k2": [1]}, k=8, m=4, nb_partitions=8)
-    assert load_partitioner(p, 8, 4, 8) == {"k1": [0, 2], "k2": [1]}
-    with pytest.raises(ValueError):
-        load_partitioner(p, 9, 4, 8)
-    with pytest.raises(ValueError):
-        load_partitioner(p, 8, 4, 16)
 
 
 def test_streaming_hll_matches_batch(spark, sf_dir, tmp_path):

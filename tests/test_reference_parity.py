@@ -58,7 +58,7 @@ def dna_counts(spark):
         ("D2", s) for s in read_fasta(f"{REF_DATA}/2.fasta")
     ]
     df = spark.createDataFrame(rows, ["source", "text"])
-    cfg = KmConfig(k=31, m=10, hard_min=1, nb_partitions=4, alphabet="dna")
+    cfg = KmConfig(k=31, hard_min=1, nb_partitions=4, alphabet="dna")
     return count_kgrams(df, cfg).cache()
 
 

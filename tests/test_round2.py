@@ -1,4 +1,4 @@
-"""Round-2 additions: sampled repartition wiring, CLI post-ops,
+"""Round-2 additions: static part_id placement, CLI post-ops,
 bloom modes in the pipeline, dedup edge/scale fixes."""
 
 import json
@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from kmtricks_spark import KmConfig
-from kmtricks_spark.operators.count import count_kgrams
 from kmtricks_spark.operators.dedup import (
     minhash_lsh_pairs,
     minhash_signatures,
@@ -29,52 +28,6 @@ def zipf_docs(spark):
     rows = [(f"s{i % 4}", hot + f"unique text body number {i} with tail {i * 7}")
             for i in range(64)]
     return spark.createDataFrame(rows, ["source", "text"])
-
-
-def test_sampled_counts_equal_static(spark, zipf_docs):
-    """repartition_type only moves rows between part_ids — count VALUES
-    are identical to the static path."""
-    static = count_kgrams(zipf_docs, CFG).select("sample_id", "kgram", "count")
-    sampled = count_kgrams(
-        zipf_docs, CFG.with_(repartition_type="sampled")
-    ).select("sample_id", "kgram", "count")
-    assert static.exceptAll(sampled).count() == 0
-    assert sampled.exceptAll(static).count() == 0
-
-
-def test_sampled_one_part_per_kgram(spark, zipf_docs):
-    c = count_kgrams(zipf_docs, CFG.with_(repartition_type="sampled"))
-    multi = (
-        c.groupBy("kgram").agg(F.countDistinct("part_id").alias("n"))
-        .where(F.col("n") > 1).count()
-    )
-    assert multi == 0
-
-
-def test_pipeline_sampled_persists_and_reuses(spark, zipf_docs, tmp_path):
-    inp = str(tmp_path / "zipf.parquet")
-    zipf_docs.write.parquet(inp)
-    rd = str(tmp_path / "run_sampled")
-    cfg = CFG.with_(repartition_type="sampled")
-    Pipeline(spark, cfg, rd, inp, until="counts").run()
-    pfile = os.path.join(rd, "partitioner.json")
-    assert os.path.exists(pfile)
-    rec = json.load(open(pfile))
-    assert rec["nb_partitions"] == cfg.nb_partitions and rec["hot_map"]
-
-    # reuse in a second run via repart_from -> identical part assignment
-    rd2 = str(tmp_path / "run_reuse")
-    Pipeline(spark, CFG, rd2, inp, until="counts", repart_from=pfile).run()
-    a = spark.read.parquet(os.path.join(rd, "counts")).select("kgram", "part_id")
-    b = spark.read.parquet(os.path.join(rd2, "counts")).select("kgram", "part_id")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-    # compat refusal: different P must raise (task.hpp:136-147 analogue)
-    with pytest.raises(ValueError, match="mismatch"):
-        Pipeline(
-            spark, CFG.with_(nb_partitions=16), str(tmp_path / "bad"), inp,
-            until="counts", repart_from=pfile,
-        ).run()
 
 
 def test_pipeline_bloom_modes(spark, sf_dir, tmp_path):
@@ -161,17 +114,36 @@ def test_spark_submit_pyfiles(tmp_path, sf_dir):
     assert rec["status"] == {"counts": "done"} and rec["count_rows"] > 0
 
 
-def test_cli_repart_and_infos(tmp_path, sf_dir):
+def test_cli_infos(tmp_path, sf_dir):
     inp = os.path.join(sf_dir, "documents.parquet")
-    rd = str(tmp_path / "rep")
-    rec = json.loads(_cli(["repart", "--input", inp, "--run-dir", rd,
-                           "--nb-partitions", "8", "--cores", "8"]))
-    assert rec["hot_keys"] > 0 and os.path.exists(rec["path"])
     rd2 = str(tmp_path / "run")
     _cli(["pipeline", "--input", inp, "--run-dir", rd2, "--until", "counts",
-          "--nb-partitions", "8", "--repart-from", rec["path"], "--cores", "8"])
+          "--nb-partitions", "8", "--cores", "8"])
     info = json.loads(_cli(["infos", "--run-dir", rd2]))
     assert info["stages"]["counts"]["output_rows"] > 0
+
+
+def test_cli_rejects_removed_placement_flags(tmp_path, sf_dir):
+    """The sampled-placement surface is gone: each of its flags and the
+    repart subcommand exits non-zero at argument parsing, naming itself,
+    before any run directory is made."""
+    inp = os.path.join(sf_dir, "documents.parquet")
+    rd = str(tmp_path / "run")
+    base = ["pipeline", "--input", inp, "--run-dir", rd]
+    cases = {
+        "--repartition": [*base, "--repartition", "static"],
+        "--repart-from": [*base, "--repart-from", str(tmp_path / "partitioner.json")],
+        "--minimizer-size": [*base, "--minimizer-size", "4"],
+        "repart": ["repart", "--input", inp, "--run-dir", rd],
+    }
+    for name, argv in cases.items():
+        r = subprocess.run(
+            [sys.executable, "-m", "kmtricks_spark.cli", *argv],
+            capture_output=True, text=True, timeout=120, cwd=_REPO,
+        )
+        assert r.returncode != 0, name
+        assert name in r.stderr, (name, r.stderr[-500:])
+    assert not os.path.exists(rd)
 
 
 def test_ngram_short_docs_and_max_df(spark):
@@ -188,46 +160,30 @@ def test_ngram_short_docs_and_max_df(spark):
     assert uncapped == 30 * 29 // 2 and capped == 0
 
 
-def test_sampled_bytes_mode_and_dna(spark, zipf_docs):
-    """Review regressions: the sampling pre-pass must mirror the count
-    path's kgram representation (bytes mode, DNA canonicalization)."""
-    bcfg = CFG.with_(kgram_as_string=False, repartition_type="sampled")
-    a = count_kgrams(zipf_docs, bcfg).select("sample_id", "kgram", "count")
-    b = count_kgrams(zipf_docs, CFG.with_(kgram_as_string=False)).select(
-        "sample_id", "kgram", "count"
-    )
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-    dna = spark.createDataFrame(
+def test_part_id_is_static_hash(spark, zipf_docs, tmp_path):
+    """Placement pin: every counts, matrix and pa row sits in
+    part_id == pmod(xxhash64(kgram), P), for plain, restrict_to, bytes
+    mode and DNA (canonical k-mer) runs."""
+    zipf = str(tmp_path / "zipf.parquet")
+    zipf_docs.write.parquet(zipf)
+    dna = str(tmp_path / "dna.parquet")
+    spark.createDataFrame(
         [("s0", "ACGTACGTACGT" * 40), ("s1", "TTTTACGTACGT" * 40)], ["source", "text"]
-    )
-    dcfg = CFG.with_(alphabet="dna", repartition_type="sampled", hard_min=1)
-    x = count_kgrams(dna, dcfg).select("sample_id", "kgram", "count")
-    y = count_kgrams(dna, dcfg.with_(repartition_type="static")).select(
-        "sample_id", "kgram", "count"
-    )
-    assert x.exceptAll(y).count() == 0 and y.exceptAll(x).count() == 0
-    # sampled routing actually engaged: hot canonical kgrams must appear
-    # in the map (keys in canonical form, else the join would miss)
-    from kmtricks_spark.operators.partitioner import sample_kgram_hot_map
-
-    hm = sample_kgram_hot_map(dna, dcfg, fraction=1.0, top=16)
-
-    def canon(s):  # min(kmer, revcomp) under the A<C<T<G encoding order
-        enc = str.maketrans("ACTG", "0123")
-        rc = s.translate(str.maketrans("ACGT", "TGCA"))[::-1]
-        return s if s.translate(enc) <= rc.translate(enc) else rc
-
-    assert hm and all(canon(k) == k for k in hm)
-
-
-def test_partitioner_bytes_keys_roundtrip(tmp_path):
-    from kmtricks_spark.operators.partitioner import load_partitioner, save_partitioner
-
-    p = str(tmp_path / "part.json")
-    hm = {b"ACGTACGT": [3], b"\x00\xffbin": [1]}
-    save_partitioner(p, hm, k=8, m=4, nb_partitions=8)
-    assert load_partitioner(p, 8, 4, 8) == hm
+    ).write.parquet(dna)
+    runs = {
+        "plain": (CFG, zipf, {}),
+        "restrict": (CFG, zipf, {"restrict_to": [0, 3, 5]}),
+        "bytes": (CFG.with_(kgram_as_string=False), zipf, {}),
+        "dna": (CFG.with_(alphabet="dna", hard_min=1), dna, {}),
+    }
+    for name, (cfg, inp, kw) in runs.items():
+        rd = str(tmp_path / name)
+        Pipeline(spark, cfg, rd, inp, until="pa", **kw).run()
+        for stage in ("counts", "matrix", "pa"):
+            t = spark.read.parquet(os.path.join(rd, stage))
+            want = F.pmod(F.xxhash64("kgram"), F.lit(cfg.nb_partitions))
+            assert t.count() > 0, (name, stage)
+            assert t.where(F.col("part_id") != want).count() == 0, (name, stage)
 
 
 def test_frame_sample_zero_duration(spark):
@@ -237,30 +193,6 @@ def test_frame_sample_zero_duration(spark):
     df = spark.createDataFrame(rows, MEDIA_SCHEMA)
     got = frame_sample(df, every_ms=500).collect()
     assert [r.frame_ts_ms for r in got] == [0]
-
-
-def test_repart_compat_placement_provenance(tmp_path):
-    from kmtricks_spark.operators.matrix_ops import check_repart_compat
-
-    base = {"k": 8, "m": 4, "nb_partitions": 8}
-    # static + static: fine
-    check_repart_compat({**base, "repartition_type": "static"},
-                        {**base, "repartition_type": "static"})
-    # sampled vs static: refused
-    with pytest.raises(ValueError, match="repartition_type"):
-        check_repart_compat({**base, "repartition_type": "sampled"},
-                            {**base, "repartition_type": "static"})
-    # two independently-sampled runs: refused
-    with pytest.raises(ValueError, match="share"):
-        check_repart_compat({**base, "repartition_type": "sampled", "repart_from": None},
-                            {**base, "repartition_type": "sampled", "repart_from": None})
-    # B reused A's own map: accepted
-    check_repart_compat(
-        {**base, "repartition_type": "sampled", "repart_from": None},
-        {**base, "repartition_type": "sampled",
-         "repart_from": str(tmp_path / "runA" / "partitioner.json")},
-        dir_a=str(tmp_path / "runA"), dir_b=str(tmp_path / "runB"),
-    )
 
 
 def test_auto_partitions(spark, sf_dir):

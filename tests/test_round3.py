@@ -1,5 +1,5 @@
-"""Round-3 additions: repart-from placement provenance, combine lineage
-refusal, --restrict-to fraction, per-sample module granularity."""
+"""Round-3 additions: combine lineage refusal, --restrict-to fraction,
+per-sample module granularity."""
 
 import json
 import os
@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from kmtricks_spark import KmConfig
-from kmtricks_spark.operators.matrix_ops import check_repart_compat
 from kmtricks_spark.plans.lineage import read_lineage
 from kmtricks_spark.plans.pipeline import Pipeline
 
@@ -31,64 +30,6 @@ def _cli(args, timeout=300, expect_fail=False):
         return r.stderr
     assert r.returncode == 0, r.stderr[-2000:]
     return [l for l in r.stdout.splitlines() if l.startswith("{")][-1]
-
-
-def test_repart_from_records_sampled_provenance(spark, sf_dir, tmp_path):
-    """ADVICE r2: a --repart-from run follows the loaded sampled map, so
-    its lineage must say 'sampled' (not the CLI-default 'static'), it must
-    keep its own copy of the map, and compat must (a) accept it against
-    the origin run, (b) refuse it against a genuinely static run."""
-    inp = os.path.join(sf_dir, "documents.parquet")
-    rd_src = str(tmp_path / "src")
-    Pipeline(spark, CFG.with_(repartition_type="sampled"), rd_src, inp,
-             until="matrix").run()
-    pfile = os.path.join(rd_src, "partitioner.json")
-
-    rd_reuse = str(tmp_path / "reuse")
-    # cfg says 'static' (the CLI default) — repart_from must override
-    Pipeline(spark, CFG, rd_reuse, inp, until="matrix", repart_from=pfile).run()
-    lr = read_lineage(rd_reuse, "matrix")["params"]
-    assert lr["repartition_type"] == "sampled"
-    assert os.path.exists(os.path.join(rd_reuse, "partitioner.json"))
-
-    ls = read_lineage(rd_src, "matrix")["params"]
-    # accepted against the origin (shared map)
-    check_repart_compat(ls, lr, dir_a=rd_src, dir_b=rd_reuse)
-    # refused against a genuinely static run
-    rd_static = str(tmp_path / "static")
-    Pipeline(spark, CFG, rd_static, inp, until="matrix").run()
-    lst = read_lineage(rd_static, "matrix")["params"]
-    with pytest.raises(ValueError, match="repartition_type"):
-        check_repart_compat(lst, lr, dir_a=rd_static, dir_b=rd_reuse)
-
-
-def test_repart_compat_content_hash_and_relative_paths(tmp_path):
-    """Two runs that copied the SAME map are compatible even when their
-    repart_from strings differ; relative paths are realpath-normalized."""
-    import shutil
-
-    src = tmp_path / "srcmap" / "partitioner.json"
-    src.parent.mkdir()
-    src.write_text(json.dumps({"k": 8, "m": 4, "nb_partitions": 8,
-                               "key_encoding": "utf8", "hot_map": {"aa": [0]}}))
-    da, db = tmp_path / "ra", tmp_path / "rb"
-    da.mkdir(), db.mkdir()
-    shutil.copy(src, da / "partitioner.json")
-    shutil.copy(src, db / "partitioner.json")
-    pa = {"k": 8, "m": 4, "nb_partitions": 8, "repartition_type": "sampled",
-          "repart_from": str(da / "x" / ".." / "partitioner.json")}
-    pb = {"k": 8, "m": 4, "nb_partitions": 8, "repartition_type": "sampled",
-          "repart_from": str(src)}
-    check_repart_compat(pa, pb, dir_a=str(da), dir_b=str(db))  # no raise
-    # different map contents -> refused
-    (db / "partitioner.json").write_text(json.dumps(
-        {"k": 8, "m": 4, "nb_partitions": 8, "key_encoding": "utf8",
-         "hot_map": {"bb": [1]}}))
-    with pytest.raises(ValueError, match="hot map"):
-        check_repart_compat(
-            {**pa, "repart_from": None}, {**pb, "repart_from": None},
-            dir_a=str(da), dir_b=str(db),
-        )
 
 
 def test_restrict_to_fraction_matches_list(tmp_path, sf_dir):

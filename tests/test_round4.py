@@ -534,7 +534,7 @@ def test_cli_plugin_rejected_off_merge_path():
     """Subcommands that never reach the merge stage refuse --plugin at
     parse time (no silent accept-and-ignore)."""
     r = subprocess.run(
-        [sys.executable, "-m", "kmtricks_spark.cli", "repart",
+        [sys.executable, "-m", "kmtricks_spark.cli", "counts",
          "--input", "x.parquet", "--run-dir", "/tmp/nope",
          "--plugin", "m:f"],
         capture_output=True, text=True, timeout=60, cwd=_REPO,
