@@ -1,5 +1,6 @@
-"""Bloom-filter stage: windowed hashing -> per-(sample, partition) slices
--> per-sample global filters, plus the bfc variant and the FPR report.
+"""Bloom-filter stage: windowed hashing -> per-(sample, partition) slices,
+plus the bfc variant, the FPR report, per-sample global filters and the
+membership probe.
 
 Reference parity (SURVEY §2 A6/A9/P8/P11/P13, S7):
 * hash-mode counts   — groupBy over the windowed hash (sorting_count.hpp:
@@ -16,21 +17,27 @@ Reference parity (SURVEY §2 A6/A9/P8/P11/P13, S7):
   built by the same bitmap build over a window_bits * w bit window.
 * fpr                — (1-e^{-n/m}) per (sample, partition) (utils.hpp:
   239-243, task.hpp:849-860).
+* probe              — a join on (part_id, sample_id) and a bit read of
+  the window, held as 64-bit words.
 
-The only Python boundary in this module is bf_probe's cogroup.
+Every plan here runs in the JVM, with no Python boundary.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from kmtricks_spark.config import KmConfig
 from kmtricks_spark.functions.hashing import part_id_col, windowed_hash_col
-from kmtricks_spark.sketches import bloom
+
+BLOOM_MODES = ("bf", "bft", "bfc")
+
+
+def check_bfc_width(width: int) -> None:
+    """bfc cells pack whole into bytes: the width must divide 8."""
+    if width not in (1, 2, 4, 8):
+        raise ValueError(f"bfc_width must divide 8 (1, 2, 4 or 8), got {width}")
 
 
 def hash_counts(counts: DataFrame, cfg: KmConfig) -> DataFrame:
@@ -196,8 +203,7 @@ def bfc_slices(hcounts: DataFrame, cfg: KmConfig) -> DataFrame:
     width bits by the bf_slices bitmap build: bit j of cell i is window
     bit i*width + j. Counts are >= 1, as hash_counts leaves them."""
     w, width = cfg.window_bits, cfg.bfc_width
-    if width not in (1, 2, 4, 8):
-        raise ValueError(f"bfc_width must divide 8 (1, 2, 4 or 8), got {width}")
+    check_bfc_width(width)
     cell = F.least(F.length(F.bin(F.col("count"))), F.lit((1 << width) - 1))
     bits = hcounts.select(
         "part_id",
@@ -227,66 +233,49 @@ def fpr_report(slices: DataFrame, cfg: KmConfig) -> DataFrame:
 
 def bf_probe(slices: DataFrame, probes: DataFrame, cfg: KmConfig) -> DataFrame:
     """Distributed membership probe: (sample_id, kgram) rows against the
-    per-(partition, sample) slices. Each kgram is routed by the same
-    static hash the build used (part_id_col). Joins on (part_id,
-    sample_id); a vectorized bit check reads the window bitmap. Returns
-    (sample_id, kgram, member int).
+    per-(partition, sample) slices. Returns (sample_id, kgram, member
+    int), one row per probe row.
+
+    Each kgram is routed by the static hash the build used (part_id_col)
+    and gets the same window-local index (windowed_hash_col minus the
+    window anchor). Probes left-join the slices on (part_id, sample_id)
+    and read bit local_idx of the window in the JVM. A probe whose
+    (partition, sample) has no slice is member 0.
+
+    The slices enter the join as arrays of 64-bit words, one per 8
+    window bytes, parsed once per slice from the bitmap's hex. A joined
+    row then reads its word in place: a binary column is copied whole
+    into every row that reads it, so reading one byte of the bitmap
+    would copy the window (64 KB at perfbench's 2^22 bits over 8
+    partitions) once per probe. hex prints byte 0 first, so window bit
+    i is bit (7 - i/8 % 8) * 8 + i % 8 of its word (LSB-first bytes,
+    as the build lays them out).
 
     Bloom guarantee under test: member == 1 for every key that was
     inserted (no false negatives) — which makes present-key probes
     exactly oracle-comparable; absent keys may report 1 at the modeled
     FPR.
 
-    Scale shape: probes and slices COGROUP on (part_id, sample_id) — each
-    task sees one window bitmap ONCE (np.frombuffer, zero-copy) and gathers
-    all of that group's probe bits with the vectorized contains_local
-    kernel. No per-row Python, and the bitmap is never replicated onto
-    probe rows the way a plain join would."""
+    The planner picks the join from its size estimates, with no hint:
+    for slices read from a run's `bloom` table that is the compressed
+    parquet size (257 KB at perfbench's 8 samples x 2^22 bits, while
+    the bitmaps take 4.2 MB in memory), so at that scale it broadcasts
+    the slices."""
     w = cfg.window_bits
-    routed = probes.select(
-        "sample_id", "kgram", part_id_col(F.col("kgram"), cfg.nb_partitions)
+    part = part_id_col(F.col("kgram"), cfg.nb_partitions)
+    local = windowed_hash_col(F.col("kgram"), w, part) - part.cast("long") * F.lit(w)
+    routed = probes.select("sample_id", "kgram", part, local.alias("local_idx"))
+    words = slices.select(
+        "part_id",
+        "sample_id",
+        F.transform(
+            F.regexp_extract_all(F.hex("bitmap"), F.lit(".{16}"), F.lit(0)),
+            lambda h: F.conv(h, 16, -10).cast("long"),
+        ).alias("words"),
     )
-    # the SAME hash expression the build side used (hash_counts), so a
-    # seed/formula change can never silently diverge build vs probe:
-    # local index = windowed hash minus the window anchor
-    p = routed.withColumn(
-        "local_idx",
-        windowed_hash_col(F.col("kgram"), w, F.col("part_id"))
-        - F.col("part_id").cast("long") * F.lit(w),
+    idx = F.col("local_idx")
+    word = F.element_at("words", (F.shiftright(idx, 6) + 1).cast("int"))
+    bit = F.bit_get(word, ((F.lit(7) - F.shiftright(idx, 3) % 8) * 8 + idx % 8).cast("int"))
+    return routed.join(words, ["part_id", "sample_id"], "left").select(
+        "sample_id", "kgram", F.coalesce(bit.cast("int"), F.lit(0)).alias("member")
     )
-    out_schema = StructType(
-        [
-            StructField("sample_id", StringType()),
-            probes.schema["kgram"],
-            StructField("member", IntegerType()),
-        ]
-    )
-
-    def probe_group(key, probes_pdf, slices_pdf):
-        if len(probes_pdf) == 0:
-            return pd.DataFrame(columns=["sample_id", "kgram", "member"])
-        if len(slices_pdf) == 0:
-            member = np.zeros(len(probes_pdf), dtype=np.int32)
-        else:
-            bm = np.frombuffer(slices_pdf["bitmap"].iloc[0], dtype=np.uint8)
-            idx = probes_pdf["local_idx"].to_numpy(dtype=np.int64)
-            member = bloom.contains_local(bm, idx).astype(np.int32)
-        return pd.DataFrame(
-            {
-                "sample_id": probes_pdf["sample_id"],
-                "kgram": probes_pdf["kgram"],
-                "member": member,
-            }
-        )
-
-    return (
-        p.groupBy("part_id", "sample_id")
-        .cogroup(slices.select("part_id", "sample_id", "bitmap").groupBy("part_id", "sample_id"))
-        .applyInPandas(probe_group, out_schema)
-    )
-
-
-def bf_contains(filter_blob: bytes, kgram_hashes_global: np.ndarray) -> np.ndarray:
-    """Driver-side membership probe on a concatenated per-sample filter."""
-    state = np.frombuffer(filter_blob, dtype=np.uint8)
-    return bloom.contains_local(state, kgram_hashes_global.astype(np.int64))

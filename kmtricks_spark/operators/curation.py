@@ -272,7 +272,7 @@ def _gate_table(
 
 
 def _funnel(
-    kept: DataFrame,
+    source: Callable[[], DataFrame],
     gates: list[tuple],
     materialize: Callable[[str, DataFrame, Callable[[int], dict]], DataFrame],
     resume: Callable[[str], tuple[DataFrame, dict] | None] = lambda stage: None,
@@ -286,11 +286,14 @@ def _funnel(
     ``funnel(rows)`` with the survivor count it observed, which folds
     the gate's counts into the report and returns the report so far.
     ``resume(stage)`` returns the table and lineage record of a stage
-    completed by an earlier run, or None."""
+    completed by an earlier run, or None. ``source()`` returns the input
+    frame; it is called only when a gate runs on it or the report needs
+    its count, so a fully resumed funnel never reads the input."""
     from kmtricks_spark.operators.dedup import release_persisted
 
     report: dict = {}
     status: dict = {}
+    kept = None
     for stage, key, enabled, body in gates:
         if not enabled:
             status[stage] = "disabled"
@@ -301,6 +304,8 @@ def _funnel(
                 report[key] = rec["output_rows"]
             status[stage] = "skipped"
         else:
+            if kept is None:
+                kept = source()
             if key is None:
                 out, counts = body(kept, report)
             else:
@@ -319,6 +324,7 @@ def _funnel(
         if until == stage:
             break
     if "input" not in report:  # nothing enabled at all
+        kept = source() if kept is None else kept
         report["input"] = kept.count()
     last = [k for k in report if k.startswith("after_")]
     report["removed"] = report["input"] - (report[last[-1]] if last else report["input"])
@@ -396,7 +402,7 @@ def curate(
         semantic, vec_col, semantic_n_lists, span_action, max_docs_per_domain,
         url_col,
     )
-    kept, report, _ = _funnel(df, gates, checkpoint)
+    kept, report, _ = _funnel(lambda: df, gates, checkpoint)
     return kept, report
 
 
@@ -504,7 +510,7 @@ def curate_run(
         return read_stage(spark, run_dir, stage), read_lineage(run_dir, stage)
 
     kept, report, status = _funnel(
-        spark.read.parquet(input_path), gates, persist, resume, until
+        lambda: spark.read.parquet(input_path), gates, persist, resume, until
     )
     report["stages"] = status
     return kept, report

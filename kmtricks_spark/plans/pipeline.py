@@ -30,7 +30,14 @@ from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from kmtricks_spark.config import KmConfig
-from kmtricks_spark.operators.bloom_stage import bf_concat, bf_slices, fpr_report, hash_counts
+from kmtricks_spark.operators.bloom_stage import (
+    BLOOM_MODES,
+    bf_slices,
+    bfc_slices,
+    check_bfc_width,
+    fpr_report,
+    hash_counts,
+)
 from kmtricks_spark.operators.count import count_kgrams, histogram, thresholds_from_histogram
 from kmtricks_spark.operators.merge import count_matrix, merge_stats, pa_matrix
 from kmtricks_spark.plans.lineage import stage_complete, write_lineage
@@ -56,6 +63,10 @@ class Pipeline:
     ):
         if until is not None and until not in STAGES:
             raise ValueError(f"until must be one of {STAGES}")
+        if cfg.bloom_mode not in BLOOM_MODES:
+            raise ValueError(f"bloom_mode must be one of {BLOOM_MODES}, got {cfg.bloom_mode!r}")
+        if cfg.bloom_mode == "bfc":
+            check_bfc_width(cfg.bfc_width)
         if export_bf and cfg.bloom_mode == "bfc":
             raise ValueError(
                 "--export-filters is only supported for bloom_mode bf/bft "
@@ -209,30 +220,20 @@ class Pipeline:
             return False
         counts = self._restrict(read_stage(self.spark, self.run_dir, "counts"))
         hc = hash_counts(counts, self.cfg)
-        mode = self.cfg.bloom_mode
-        if mode == "bfc":
-            from kmtricks_spark.operators.bloom_stage import bfc_slices
-
+        if self.cfg.bloom_mode == "bfc":
             return self._finish("bloom", write_stage(
                 bfc_slices(hc, self.cfg), self.run_dir, "bloom", partition_by=["part_id"]
             ))
-        if mode not in ("bf", "bft"):
-            raise ValueError(f"bloom_mode must be bf|bft|bfc, got {mode!r}")
         # bft's transposed rows equal bf's slices byte for byte
-        slices = bf_slices(hc, self.cfg)
-        observed = write_stage(slices, self.run_dir, "bloom", partition_by=["part_id"])
-        slices_r = read_stage(self.spark, self.run_dir, "bloom")
-        write_stage(bf_concat(slices_r, self.cfg), self.run_dir, "bloom_filters")
-        write_stage(fpr_report(slices_r, self.cfg), self.run_dir, "fpr")
+        observed = write_stage(bf_slices(hc, self.cfg), self.run_dir, "bloom",
+                               partition_by=["part_id"])
+        slices = read_stage(self.spark, self.run_dir, "bloom")
+        write_stage(fpr_report(slices, self.cfg), self.run_dir, "fpr")
         if self.export_bf:
             from kmtricks_spark.sources.howde import export_filters
 
-            export_filters(
-                read_stage(self.spark, self.run_dir, "bloom_filters"),
-                os.path.join(self.run_dir, "filters"),
-                self.cfg,
-                bf_format=self.export_bf,
-            )
+            export_filters(slices, os.path.join(self.run_dir, "filters"), self.cfg,
+                           bf_format=self.export_bf)
         return self._finish("bloom", observed)
 
     def run(self) -> dict[str, str]:

@@ -12,9 +12,9 @@ payload row per group (``sketch_agg``):
 The numpy kernels here are what the Spark paths must reproduce:
 ``hll`` (create / add_hashes / estimate) is the register and estimate
 reference, ``cms`` holds the cell layout, payload format and driver-side
-point queries, and ``bloom`` holds the layout kernels that the JVM Bloom
-builds in operators/bloom_stage.py reproduce, plus the probe-side bit
-check.
+point queries, and ``bloom`` holds the test references of the JVM Bloom
+code in operators/bloom_stage.py: the layouts its builds reproduce and
+the bit check its probe answers like.
 """
 
 from kmtricks_spark.sketches import bloom, cms, hll  # noqa: F401

@@ -7,9 +7,10 @@ w = round_up(ceil(B/P), 64) bits; a key in partition p sets bit
 independently and the global per-sample filter is the ordered
 concatenation of its P slices — no re-hashing, merge = bytewise OR.
 
-The Spark builds in operators/bloom_stage.py run in the JVM; these
-kernels define the layouts they must reproduce byte for byte, and serve
-the membership probes (bf_probe's bit check):
+The Spark builds and the probe in operators/bloom_stage.py run in the
+JVM; these kernels are the test references for them: the layouts the
+builds must reproduce byte for byte, and the bit check (contains_local)
+that bf_probe must answer like:
 * bf / bft — one BITSET slice per (sample, partition), LSB-first per
         byte (A9, count_processor.hpp:84-120); the bft transpose
         (merge.hpp:631-644) yields the same sample-major rows.

@@ -3,33 +3,38 @@
 The reference writes one standalone Bloom-filter file per sample by
 concatenating that sample's per-partition hash windows behind a
 `bffileheader` (howde_utils.hpp:56-122: magic, version, k, num bits,
-single BF component). Two container formats:
+single BF component). `export_filters` streams those files straight from
+the `bloom` slices table. Two container formats:
 
 * KMBF (default): a compact self-defined little-endian header followed
   by the raw bit vector — the engine's own artifact.
-* howdesbt: mirrors the reference's bffileheader write protocol
-  (howde_utils.hpp:56-122) field-for-field: a two-phase write (zeroed
-  header region stamped with the UNFINISHED magic + prefix first, data,
-  then the finished header rewritten at offset 0 — the crash-consistency
-  trick), single uncompressed vector, numBytes = bits/8 + 8 for the
-  leading 8-byte size word the reference emits before the windows
-  (howde_utils.hpp:148). Field order and sizes follow the assignments
-  in the reference verbatim; howdesbt's numeric magic/kind constants are
-  not vendored in the reference repo, so they are module-level
-  parameters (defaults below) — override them for bit-exact interop
-  with an external howdesbt build.
+* howdesbt: the reference's bffileheader fields, assignment for
+  assignment (howde_utils.hpp:64-82): single uncompressed vector,
+  numBytes = bits/8 + 8 for the leading 8-byte size word the reference
+  emits before the windows (howde_utils.hpp:148). howdesbt's numeric
+  magic constants are not vendored in the reference repo, so
+  HOWDE_MAGIC/HOWDE_MAGIC_UN below are defaults: set them to the
+  constants of an external howdesbt build for bit-exact interop. The
+  exporter and the readers look them up at call time.
+
+Both formats are written in two phases, the reference's crash-
+consistency trick: the header stamped with the UNFINISHED magic first,
+then the data, then the finished header at offset 0. A writer killed
+mid-way leaves the UNFINISHED magic, which every reader refuses.
 """
 
 from __future__ import annotations
 
+import os
 import struct
 from dataclasses import dataclass
 
 import numpy as np
 
 MAGIC = b"KMBF0001"
-MAGIC_UN = b"KMBF!UNF"  # placeholder magic while a (streaming) write is in flight
+MAGIC_UN = b"KMBF!UNF"  # placeholder magic while a write is in flight
 VERSION = 1
+_KMBF_FMT = "<IQQQQ"  # version, k, num bits, P << 32 | window words, n_set
 
 # --- howdesbt bffileheader parameters (howde_utils.hpp:56-86) ---------
 # layout: magic u64 | headerSize u32 | version u32 | bfKind u32 |
@@ -38,7 +43,6 @@ VERSION = 1
 # setSize u64 | info[0]{compressor u32, name u32, offset u64,
 # numBytes u64, filterInfo u64}  => 112 bytes, already 16-aligned
 _HOWDE_FMT = "<QIIIII4xQQQQIIQIIQQQ"
-_HOWDE_PREFIX_FMT = "<QII"  # bffileprefix: magic, headerSize, version
 HOWDE_HEADER_SIZE = struct.calcsize(_HOWDE_FMT)  # round_up_16(112) == 112
 HOWDE_MAGIC = int.from_bytes(b"HOWDESBF", "little")      # parameterized:
 HOWDE_MAGIC_UN = int.from_bytes(b"HOWDESUN", "little")   # see module doc
@@ -56,33 +60,30 @@ class BFHeader:
     n_set: int
 
 
-def write_bf_file(path: str, header: BFHeader, filter_bytes: bytes) -> None:
-    assert len(filter_bytes) * 8 == header.num_bits, "filter/num_bits mismatch"
-    with open(path, "wb") as f:
-        f.write(MAGIC)
-        f.write(
-            struct.pack(
-                "<IQQQQ",
-                VERSION,
-                header.k,
-                header.num_bits,
-                (header.nb_partitions << 32) | header.window_bits // 64,
-                header.n_set,
-            )
-        )
-        f.write(filter_bytes)
+def _kmbf_header(magic: bytes, cfg, n_set: int) -> bytes:
+    return magic + struct.pack(
+        _KMBF_FMT,
+        VERSION,
+        cfg.k,
+        cfg.total_bloom_bits,
+        (cfg.nb_partitions << 32) | cfg.window_bits // 64,
+        n_set,
+    )
 
 
-def _howde_header_bytes(k: int, num_bits: int, magic: int | None = None) -> bytes:
-    """The finished bffileheader for one uncompressed vector, mirroring
-    howde_utils.hpp:64-82 assignment-for-assignment."""
+def _howde_header(magic: int, cfg, n_set: int) -> bytes:
+    """The bffileheader for one uncompressed vector, mirroring
+    howde_utils.hpp:64-82 assignment-for-assignment, followed by the
+    sdsl-style size word that precedes the bits. The reference leaves
+    the set size unknown, so n_set is not stored."""
+    num_bits = cfg.total_bloom_bits
     return struct.pack(
         _HOWDE_FMT,
-        HOWDE_MAGIC if magic is None else magic,  # header->magic
+        magic,                       # header->magic
         HOWDE_HEADER_SIZE,           # header->headerSize = round_up_16(...)
         HOWDE_VERSION,               # header->version
         HOWDE_BFKIND_SIMPLE,         # header->bfKind
-        k,                           # header->smerSize
+        cfg.k,                       # header->smerSize
         1,                           # header->numHashes
         0,                           # header->hashSeed1
         0,                           # header->hashSeed2
@@ -96,53 +97,12 @@ def _howde_header_bytes(k: int, num_bits: int, magic: int | None = None) -> byte
         HOWDE_HEADER_SIZE,           # info[0].offset = bytes written so far
         num_bits // 8 + 8,           # info[0].numBytes (+8: size word)
         0,                           # info[0].filterInfo
-    )
+    ) + struct.pack("<Q", num_bits)
 
 
-def write_bf_file_howdesbt(
-    path: str,
-    header: BFHeader,
-    filter_bytes: bytes,
-    magic: int | None = None,
-    magic_un: int | None = None,
-) -> None:
-    """Two-phase write, as the reference does it (howde_utils.hpp:56-86 +
-    data at :148-150): (1) zeroed header region carrying only the
-    UNFINISHED prefix, (2) the 8-byte bloom-size word + concatenated
-    windows, (3) seek(0) and the finished header. A writer killed mid-way
-    leaves the UNFINISHED magic, which read_bf_file_howdesbt refuses.
-
-    ``magic``/``magic_un`` override the module defaults for bit-exact
-    interop with an external howdesbt build: set them to the constants
-    in that build's bloom_filter_file.h (they are not vendored in the
-    reference repo, so no default can honestly claim upstream parity —
-    the knob test pins that a parameterized write round-trips through a
-    reader configured the same way)."""
-    assert len(filter_bytes) * 8 == header.num_bits, "filter/num_bits mismatch"
-    with open(path, "wb") as f:
-        unfinished = bytearray(HOWDE_HEADER_SIZE)
-        prefix_size = struct.calcsize(_HOWDE_PREFIX_FMT)
-        unfinished[:prefix_size] = struct.pack(
-            _HOWDE_PREFIX_FMT,
-            HOWDE_MAGIC_UN if magic_un is None else magic_un,
-            prefix_size,
-            0,
-        )
-        f.write(bytes(unfinished))
-        f.write(struct.pack("<Q", header.num_bits))  # sdsl-style size word
-        f.write(filter_bytes)
-        f.seek(0)
-        f.write(_howde_header_bytes(header.k, header.num_bits, magic=magic))
-
-
-def read_bf_file_howdesbt(
-    path: str, magic: int | None = None, magic_un: int | None = None
-) -> tuple[BFHeader, np.ndarray]:
+def read_bf_file_howdesbt(path: str) -> tuple[BFHeader, np.ndarray]:
     """Raises ValueError (never bare AssertionError, which `python -O`
-    strips) on unfinished, truncated, foreign, or inconsistent files.
-    ``magic``/``magic_un`` mirror write_bf_file_howdesbt's knobs."""
-    want = HOWDE_MAGIC if magic is None else magic
-    want_un = HOWDE_MAGIC_UN if magic_un is None else magic_un
+    strips) on unfinished, truncated, foreign, or inconsistent files."""
     with open(path, "rb") as f:
         raw = f.read(HOWDE_HEADER_SIZE)
         if len(raw) < HOWDE_HEADER_SIZE:
@@ -151,9 +111,9 @@ def read_bf_file_howdesbt(
             )
         fields = struct.unpack(_HOWDE_FMT, raw)
         got_magic = fields[0]
-        if got_magic == want_un:
+        if got_magic == HOWDE_MAGIC_UN:
             raise ValueError(f"{path}: unfinished howdesbt BF (writer died mid-write)")
-        if got_magic != want:
+        if got_magic != HOWDE_MAGIC:
             raise ValueError(f"{path}: bad howdesbt magic {got_magic:#x}")
         k, num_bits, num_bytes = fields[4], fields[9], fields[16]
         if num_bytes != num_bits // 8 + 8:
@@ -187,7 +147,7 @@ def read_bf_file(path: str) -> tuple[BFHeader, np.ndarray]:
         hdr = f.read(36)
         if len(hdr) < 36:
             raise ValueError(f"{path}: truncated KMBF header")
-        version, k, num_bits, packed, n_set = struct.unpack("<IQQQQ", hdr)
+        version, k, num_bits, packed, n_set = struct.unpack(_KMBF_FMT, hdr)
         if version != VERSION:
             raise ValueError(f"{path}: unsupported KMBF version {version}")
         nb_partitions = packed >> 32
@@ -199,112 +159,55 @@ def read_bf_file(path: str) -> tuple[BFHeader, np.ndarray]:
     return BFHeader(k, num_bits, nb_partitions, window_bits, n_set), bits
 
 
-def export_filters_from_slices(
-    slices_df, out_dir: str, cfg, bf_format: str = "kmbf"
-) -> list[str]:
-    """Stream per-sample BF files DIRECTLY from the slices table,
-    without ever materializing a whole filter as one byte-array value:
-    slices arrive ordered by (sample_id, part_id) via toLocalIterator
-    (Spark sorts; the driver holds ONE window at a time) and each file
-    is written window-by-window with zero-fill for absent partitions —
-    the same ordered-concat the reference does with file descriptors
-    (howde_utils.hpp:148-180). This is the artifact path that survives
-    bloom_bits where a concatenated filter column would exceed the JVM's
-    2 GB single-value limit (e.g. 2^34 bits = 2 GiB per sample)."""
-    import os
-
+def export_filters(slices_df, out_dir: str, cfg, bf_format: str = "kmbf") -> list[str]:
+    """One standalone BF file per sample, streamed from the slices table
+    (part_id, sample_id, n_set, bitmap): the sample's filter is the
+    ordered concat of its partition windows, zero-filled for absent
+    partitions — the reference's per-file concat (howde_utils.hpp:
+    133-185). Slices arrive ordered by (sample_id, part_id) through
+    toLocalIterator, so the driver holds one window at a time and a
+    filter may exceed the JVM's 2 GB single-value limit (e.g. 2^34 bits
+    per sample). Returns the file paths."""
     if bf_format not in ("kmbf", "howdesbt"):
         raise ValueError(f"bf_format must be kmbf|howdesbt, got {bf_format!r}")
+    if bf_format == "kmbf":
+        ext, header, magic, magic_un = "kmbf", _kmbf_header, MAGIC, MAGIC_UN
+    else:
+        ext, header, magic, magic_un = "bf", _howde_header, HOWDE_MAGIC, HOWDE_MAGIC_UN
     os.makedirs(out_dir, exist_ok=True)
-    ext = "kmbf" if bf_format == "kmbf" else "bf"
-    P, wb = cfg.nb_partitions, cfg.window_bytes
-    num_bits = cfg.window_bits * P
-    zero = bytes(wb)
+    P, zero = cfg.nb_partitions, bytes(cfg.window_bytes)
     paths: list[str] = []
-    cur = None  # (sample_id, file handle, next part to write, n_set)
-
-    def open_file(sample):
-        p = os.path.join(out_dir, f"{sample}.{ext}")
-        f = open(p, "wb")
-        # placeholder header stamped with the UNFINISHED magic in BOTH
-        # formats (two-phase protocol): the streaming write window spans
-        # many executor fetches, and a mid-stream crash must leave a
-        # file every reader REFUSES — a valid-looking magic with a
-        # truncated vector would be consumed silently
-        if bf_format == "kmbf":
-            f.write(MAGIC_UN + struct.pack("<IQQQQ", VERSION, cfg.k, num_bits,
-                                           (P << 32) | cfg.window_bits // 64, 0))
-        else:
-            un = bytearray(HOWDE_HEADER_SIZE)
-            ps = struct.calcsize(_HOWDE_PREFIX_FMT)
-            un[:ps] = struct.pack(_HOWDE_PREFIX_FMT, HOWDE_MAGIC_UN, ps, 0)
-            f.write(bytes(un))
-            f.write(struct.pack("<Q", num_bits))
-        return p, f
-
-    def close_file():
-        sample, f, next_part, n_set = cur
-        for _ in range(next_part, P):  # trailing zero windows
-            f.write(zero)
-        f.seek(0)
-        if bf_format == "kmbf":
-            f.write(MAGIC + struct.pack("<IQQQQ", VERSION, cfg.k, num_bits,
-                                        (P << 32) | cfg.window_bits // 64, n_set))
-        else:
-            f.write(_howde_header_bytes(cfg.k, num_bits))
-        f.close()
-
-    it = slices_df.select("sample_id", "part_id", "n_set", "bitmap").orderBy(
-        "sample_id", "part_id"
-    ).toLocalIterator()
+    f = None  # the open file of the current sample
     try:
-        for row in it:
-            if cur is None or row["sample_id"] != cur[0]:
-                if cur is not None:
-                    close_file()
-                    cur = None
-                p, f = open_file(row["sample_id"])
-                paths.append(p)
-                cur = (row["sample_id"], f, 0, 0)
-            sample, f, next_part, n_set = cur
+        for row in (
+            slices_df.select("sample_id", "part_id", "n_set", "bitmap")
+            .orderBy("sample_id", "part_id")
+            .toLocalIterator()
+        ):
+            if f is None or row["sample_id"] != sample:
+                if f is not None:
+                    _finish(f, zero, P - next_part, header(magic, cfg, n_set))
+                sample, next_part, n_set = row["sample_id"], 0, 0
+                paths.append(os.path.join(out_dir, f"{sample}.{ext}"))
+                f = open(paths[-1], "wb")
+                f.write(header(magic_un, cfg, 0))
             for _ in range(next_part, row["part_id"]):  # gap zero windows
                 f.write(zero)
             f.write(bytes(row["bitmap"]))
-            cur = (sample, f, row["part_id"] + 1, n_set + int(row["n_set"]))
-        if cur is not None:
-            close_file()
-            cur = None
+            next_part, n_set = row["part_id"] + 1, n_set + int(row["n_set"])
+        if f is not None:
+            _finish(f, zero, P - next_part, header(magic, cfg, n_set))
     finally:
-        if cur is not None:  # crashed mid-file: close the handle, leave
-            cur[1].close()   # the UNFINISHED magic for readers to refuse
+        if f is not None:  # a crash mid-file leaves the UNFINISHED magic
+            f.close()      # for readers to refuse
     return paths
 
 
-def export_filters(filters_df, out_dir: str, cfg, bf_format: str = "kmbf") -> list[str]:
-    """One standalone BF file per sample from the bloom_filters table
-    (sample_id, total_set, filter) — the reference's per-sample filter
-    files (howde_utils.hpp build()). Streams rows via toLocalIterator so
-    only one sample's filter is in driver memory at a time; files are the
-    per-sample artifact, inherently a driver/file operation (same as the
-    reference's per-file concat)."""
-    import os
-
-    if bf_format not in ("kmbf", "howdesbt"):
-        raise ValueError(f"bf_format must be kmbf|howdesbt, got {bf_format!r}")
-    os.makedirs(out_dir, exist_ok=True)
-    writer = write_bf_file if bf_format == "kmbf" else write_bf_file_howdesbt
-    ext = "kmbf" if bf_format == "kmbf" else "bf"
-    paths = []
-    for row in filters_df.select("sample_id", "total_set", "filter").toLocalIterator():
-        blob = bytes(row["filter"])
-        hdr = BFHeader(
-            k=cfg.k,
-            num_bits=len(blob) * 8,
-            nb_partitions=cfg.nb_partitions,
-            window_bits=cfg.window_bits,
-            n_set=int(row["total_set"]),
-        )
-        p = os.path.join(out_dir, f"{row['sample_id']}.{ext}")
-        writer(p, hdr, blob)
-        paths.append(p)
-    return paths
+def _finish(f, zero: bytes, trailing: int, finished_header: bytes) -> None:
+    """Write a file's trailing zero windows and its finished header, and
+    close it."""
+    for _ in range(trailing):
+        f.write(zero)
+    f.seek(0)
+    f.write(finished_header)
+    f.close()

@@ -31,3 +31,20 @@ def docs(spark):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def slices_frame(spark):
+    """Builds a hand-made `bloom` slices frame (part_id, sample_id, n_set,
+    bitmap) from {(sample_id, part_id): window bytes}; n_set is each
+    window's popcount."""
+
+    def make(windows: dict):
+        rows = [
+            (part, sample, sum(bin(b).count("1") for b in w), bytearray(w))
+            for (sample, part), w in windows.items()
+        ]
+        schema = "part_id int, sample_id string, n_set long, bitmap binary"
+        return spark.createDataFrame(rows, schema)
+
+    return make

@@ -1,15 +1,18 @@
 """Bloom stage end-to-end: membership of all counted kgrams, measured FPR
 vs the analytic bound (utils.hpp:239-243), bf == bft equivalence, bfc
-cells against the packc kernel, and pure-JVM plans."""
+cells against the packc kernel, bf_probe against the numpy bit check,
+Bloom config refusal, and pure-JVM plans."""
 
 import os
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from kmtricks_spark import KmConfig
 from kmtricks_spark.operators.bloom_stage import (
     bf_concat,
+    bf_probe,
     bf_slices,
     bfc_slices,
     fpr_report,
@@ -62,8 +65,8 @@ def test_fpr_report_matches_model(hc):
 
 
 def test_bft_equals_bf(spark, sf_dir, tmp_path):
-    """The bft pipeline mode writes the same slices and per-sample
-    filters as bf, byte for byte."""
+    """The bft pipeline mode writes the same slices and FPR report as bf,
+    byte for byte."""
     inp = os.path.join(sf_dir, "documents.parquet")
     out = {}
     for mode in ("bf", "bft"):
@@ -72,7 +75,7 @@ def test_bft_equals_bf(spark, sf_dir, tmp_path):
         p.stage_bloom()
         out[mode] = {
             t: sorted(tuple(r) for r in spark.read.parquet(os.path.join(p.run_dir, t)).collect())
-            for t in ("bloom", "bloom_filters")
+            for t in ("bloom", "fpr")
         }
     assert out["bf"]["bloom"] and out["bf"] == out["bft"]
 
@@ -106,11 +109,75 @@ def test_bfc_slices_rejects_width_not_dividing_8(hc):
         bfc_slices(hc, CFG.with_(bfc_width=3))
 
 
+def _probe_reference(slices, probes, cfg) -> list[tuple]:
+    """Sorted (sample_id, kgram, member) by the numpy bit check: route
+    each probe by xxhash64 mod P, read bit xxhash64 mod w of its
+    (partition, sample) window, member 0 where that window is absent."""
+    w = cfg.window_bits
+    windows = {(r.part_id, r.sample_id): np.frombuffer(bytes(r.bitmap), dtype=np.uint8)
+               for r in slices.collect()}
+    h = F.xxhash64("kgram")
+    rows = probes.select(
+        "sample_id", "kgram", F.pmod(h, F.lit(cfg.nb_partitions)).alias("p"),
+        F.pmod(h, F.lit(w)).alias("i"),
+    ).collect()
+    out = []
+    for r in rows:
+        bm = windows.get((r.p, r.sample_id))
+        hit = bm is not None and bool(bloom.contains_local(bm, np.array([r.i]))[0])
+        out.append((r.sample_id, r.kgram, int(hit)))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("as_string", [True, False])
+def test_bf_probe_equals_contains_local(spark, docs, as_string):
+    """bf_probe answers like bloom.contains_local on the slices, for
+    inserted keys (all members), absent keys, keys whose (sample,
+    partition) has no slice row (member 0), and bytes-mode kgrams."""
+    cfg = CFG.with_(kgram_as_string=as_string)
+    counts = count_kgrams(docs, cfg)
+    s0 = counts.select("sample_id").orderBy("sample_id").first()[0]
+    gap = (F.col("sample_id") == s0) & (F.col("part_id") == 3)
+    slices = bf_slices(hash_counts(counts, cfg), cfg).where(~gap).cache()
+    keys = counts.select("sample_id", "kgram", "part_id").orderBy("kgram", "sample_id")
+    present = keys.where(~gap).drop("part_id").limit(400)
+    in_gap = keys.where(gap).drop("part_id").limit(50)
+    absent = present.select(
+        "sample_id", F.concat("kgram", F.lit("#" if as_string else b"#")).alias("kgram")
+    )
+    probes = present.unionByName(in_gap).unionByName(absent)
+    got = bf_probe(slices, probes, cfg)
+    assert got.schema["kgram"].dataType == probes.schema["kgram"].dataType
+    assert sorted(tuple(r) for r in got.collect()) == _probe_reference(slices, probes, cfg)
+
+    def members(p):
+        return [r.member for r in bf_probe(slices, p, cfg).collect()]
+
+    assert set(members(present)) == {1}
+    assert set(members(in_gap)) == {0}
+    assert sum(members(absent)) < absent.count()
+    slices.unpersist()
+
+
+@pytest.mark.parametrize(
+    "cfg, match",
+    [(CFG.with_(bloom_mode="bloom"), "bloom_mode"),
+     (CFG.with_(bloom_mode="bfc", bfc_width=3), "bfc_width")],
+    ids=["mode", "bfc_width"],
+)
+def test_pipeline_refuses_bad_bloom_config_before_any_work(spark, sf_dir, tmp_path, cfg, match):
+    """An unknown bloom_mode, or a bfc cell width that does not divide 8,
+    is refused at construction: no stage table and no lineage file."""
+    rd = tmp_path / "run"
+    with pytest.raises(ValueError, match=match):
+        Pipeline(spark, cfg, str(rd), os.path.join(sf_dir, "documents.parquet")).run()
+    assert not rd.exists()
+
+
 def test_bloom_and_count_plans_have_no_python_nodes(spark, docs, hc):
-    """The count -> Bloom chain runs in the JVM end to end: no Arrow or
-    pandas boundary in any executed plan (bf_probe's cogroup is the one
-    Python step of the Bloom family). Nor does any plan carry a zero
-    window or bucket as a binary literal."""
+    """The count -> Bloom chain and the probe run in the JVM end to end:
+    no Arrow or pandas boundary in any executed plan. Nor does any plan
+    carry a zero window or bucket as a binary literal."""
     slices = bf_slices(hc, CFG)
     frames = [
         count_kgrams(docs, CFG),
@@ -118,6 +185,7 @@ def test_bloom_and_count_plans_have_no_python_nodes(spark, docs, hc):
         slices,
         bfc_slices(hc, CFG),
         bf_concat(slices, CFG),
+        bf_probe(slices, count_kgrams(docs, CFG).select("sample_id", "kgram"), CFG),
     ]
     for df in frames:
         df.collect()

@@ -112,6 +112,31 @@ def test_curate_run_lineage_equals_read_back(spark, sf_dir, tmp_path, no_job_lin
     assert read_lineage(rd, "decontam")["output_rows"] == rep["after_decontam"]
 
 
+def test_resumed_curate_run_starts_no_job(spark, sf_dir, tmp_path):
+    """A fully resumed three-gate curate_run reads every gate back from
+    its table and lineage, and never the input: it starts no Spark job."""
+    from kmtricks_spark.operators.curation import curate_run
+
+    inp = os.path.join(sf_dir, "documents.parquet")
+    bench = str(tmp_path / "bench.parquet")
+    spark.read.parquet(inp).orderBy("doc_id").limit(5).select("text").write.parquet(bench)
+    rd = str(tmp_path / "crun")
+    _, fresh = curate_run(spark, rd, inp, decontaminate_path=bench, **CURATE_GATES)
+    sc = spark.sparkContext
+    sc.setJobGroup("curate-resumed", "curate-resumed")
+    try:
+        _, resumed = curate_run(spark, rd, inp, decontaminate_path=bench, **CURATE_GATES)
+    finally:
+        for k in GROUP_PROPS:
+            sc.setLocalProperty(k, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    assert list(sc.statusTracker().getJobIdsForGroup("curate-resumed")) == []
+    gates = ("scalar", "dedup", "decontam")
+    assert {g: resumed["stages"][g] for g in gates} == dict.fromkeys(gates, "skipped")
+    assert {k: v for k, v in resumed.items() if k != "stages"} == {
+        k: v for k, v in fresh.items() if k != "stages"}
+
+
 def test_read_stage_schema_equals_inferring_read(spark, sf_dir, tmp_path):
     """Every table a Pipeline or curate_run writes records its read
     schema, and read_stage returns the names, order, types and
@@ -144,7 +169,7 @@ def test_read_stage_schema_equals_inferring_read(spark, sf_dir, tmp_path):
             checked.add(t)
     sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
     assert list(sc.statusTracker().getJobIdsForGroup("read-stage")) == []
-    assert checked >= {*STAGES, "histogram_oob", "merge_stats", "bloom_filters", "fpr",
+    assert checked >= {*STAGES, "histogram_oob", "merge_stats", "fpr",
                        "scalar", "domain", "dedup", "span", "decontam"}
 
 

@@ -13,7 +13,7 @@ from kmtricks_spark.operators.partitioner import two_level_count
 from kmtricks_spark.plans.lineage import read_lineage
 from kmtricks_spark.plans.pipeline import Pipeline
 from kmtricks_spark.sources.fof import parse_fof, soft_min_overrides
-from kmtricks_spark.sources.howde import BFHeader, read_bf_file, write_bf_file
+from kmtricks_spark.sources.howde import BFHeader, export_filters, read_bf_file
 
 CFG = KmConfig(k=8, hard_min=2, soft_min=2, nb_partitions=8, bloom_bits=1 << 18)
 
@@ -185,13 +185,21 @@ def test_fof_parse():
         parse_fof("justgarbage::!")
 
 
-def test_howde_roundtrip(tmp_path):
-    bits = np.random.default_rng(0).integers(0, 256, 1 << 10, dtype=np.uint8)
-    hdr = BFHeader(k=8, num_bits=bits.size * 8, nb_partitions=4, window_bits=(bits.size * 8) // 4, n_set=123)
-    p = str(tmp_path / "f.bf")
-    write_bf_file(p, hdr, bits.tobytes())
+def test_howde_roundtrip(slices_frame, tmp_path):
+    """A KMBF export reads back as the sample's ordered window concat,
+    zero-filled for its absent partition, under the header it was
+    written with."""
+    cfg = KmConfig(k=8, nb_partitions=4, bloom_bits=1 << 13)
+    wb = cfg.window_bytes
+    rng = np.random.default_rng(0)
+    windows = {("s", p): rng.integers(0, 256, wb, dtype=np.uint8).tobytes() for p in (0, 1, 3)}
+    frame = slices_frame(windows)
+    (p,) = export_filters(frame, str(tmp_path), cfg)
     hdr2, bits2 = read_bf_file(p)
-    assert hdr2 == hdr and np.array_equal(bits2, bits)
+    n_set = sum(r.n_set for r in frame.collect())
+    assert hdr2 == BFHeader(k=8, num_bits=1 << 13, nb_partitions=4, window_bits=wb * 8, n_set=n_set)
+    want = windows["s", 0] + windows["s", 1] + bytes(wb) + windows["s", 3]
+    assert bits2.tobytes() == want
 
 
 def test_iceberg_adapter_fallback_roundtrip(spark, tmp_path):

@@ -39,7 +39,7 @@ def test_pipeline_bloom_modes(spark, sf_dir, tmp_path):
         assert t.count() > 0
         if mode == "bft":
             assert "bitmap" in t.columns
-            assert os.path.exists(os.path.join(rd, "bloom_filters"))
+            assert os.path.exists(os.path.join(rd, "fpr"))
         else:
             assert "packed" in t.columns
 

@@ -83,7 +83,7 @@ def test_sample_id_module_granularity(spark, sf_dir, tmp_path):
     assert read_lineage(rd_one, "counts")["checksum"] == before
 
 
-def test_howdesbt_header_golden_bytes(tmp_path):
+def test_howdesbt_header_golden_bytes(slices_frame, tmp_path):
     """Pin the bffileheader byte layout (howde_utils.hpp:56-86): 112-byte
     header, field offsets exactly as the reference assigns them, numBytes
     = bits/8 + 8 for the leading size word."""
@@ -92,15 +92,16 @@ def test_howdesbt_header_golden_bytes(tmp_path):
     from kmtricks_spark.sources.howde import (
         HOWDE_HEADER_SIZE,
         HOWDE_MAGIC,
-        BFHeader,
+        export_filters,
         read_bf_file_howdesbt,
-        write_bf_file_howdesbt,
     )
 
     assert HOWDE_HEADER_SIZE == 112  # round_up_16(sizeof(bffileheader))
+    cfg = KmConfig(k=8, nb_partitions=4, bloom_bits=512)  # 4 windows of 128 bits
     bits = bytes([0b10100101] * 64)  # 512-bit filter
-    p = str(tmp_path / "s.bf")
-    write_bf_file_howdesbt(p, BFHeader(8, 512, 4, 128, 4 * 64), bits)
+    frame = slices_frame({("s", p): bits[16 * p:16 * (p + 1)] for p in range(4)})
+    (p,) = export_filters(frame, str(tmp_path), cfg, bf_format="howdesbt")
+    assert os.path.basename(p) == "s.bf"
     raw = open(p, "rb").read()
     assert len(raw) == 112 + 8 + 64
     # golden field offsets (little-endian)
@@ -119,27 +120,37 @@ def test_howdesbt_header_golden_bytes(tmp_path):
     assert hdr.k == 8 and hdr.num_bits == 512 and bytes(got) == bits
 
 
-def test_howdesbt_unfinished_write_detected(tmp_path):
+def test_howdesbt_unfinished_write_detected(slices_frame, tmp_path, monkeypatch):
     """The two-phase protocol: a file cut before the final header rewrite
-    still carries the UNFINISHED magic and must be refused."""
+    still carries the UNFINISHED magic and must be refused — the
+    reference's prefix-only placeholder, and the exporter's own in both
+    formats when it dies before finishing a file."""
     import struct
 
-    from kmtricks_spark.sources.howde import (
-        HOWDE_HEADER_SIZE,
-        HOWDE_MAGIC_UN,
-        _HOWDE_PREFIX_FMT,
-        read_bf_file_howdesbt,
-    )
+    from kmtricks_spark.sources import howde
 
     p = str(tmp_path / "dead.bf")
     with open(p, "wb") as f:  # phase 1 only, as a killed writer leaves it
-        un = bytearray(HOWDE_HEADER_SIZE)
-        ps = struct.calcsize(_HOWDE_PREFIX_FMT)
-        un[:ps] = struct.pack(_HOWDE_PREFIX_FMT, HOWDE_MAGIC_UN, ps, 0)
+        un = bytearray(howde.HOWDE_HEADER_SIZE)
+        un[:16] = struct.pack("<QII", howde.HOWDE_MAGIC_UN, 16, 0)  # bffileprefix
         f.write(bytes(un))
         f.write(struct.pack("<Q", 512) + bytes(64))
     with pytest.raises(ValueError, match="unfinished"):
-        read_bf_file_howdesbt(p)
+        howde.read_bf_file_howdesbt(p)
+
+    def killed(*args):
+        raise RuntimeError("killed mid-write")
+
+    monkeypatch.setattr(howde, "_finish", killed)
+    cfg = KmConfig(k=8, nb_partitions=4, bloom_bits=512)
+    frame = slices_frame({("s", 1): bytes(range(16))})
+    for fmt, reader in (("kmbf", howde.read_bf_file), ("howdesbt", howde.read_bf_file_howdesbt)):
+        out = tmp_path / fmt
+        with pytest.raises(RuntimeError, match="killed"):
+            howde.export_filters(frame, str(out), cfg, bf_format=fmt)
+        (dead,) = os.listdir(out)
+        with pytest.raises(ValueError, match="unfinished"):
+            reader(str(out / dead))
 
 
 def test_pipeline_export_filters_probe(spark, sf_dir, tmp_path):
@@ -148,8 +159,8 @@ def test_pipeline_export_filters_probe(spark, sf_dir, tmp_path):
     no-false-negative contract through the file layer)."""
     import numpy as np
 
-    from kmtricks_spark.operators.bloom_stage import bf_contains
     from kmtricks_spark.operators.count import count_kgrams
+    from kmtricks_spark.sketches import bloom
     from kmtricks_spark.sources.howde import read_bf_file_howdesbt
 
     inp = os.path.join(sf_dir, "documents.parquet")
@@ -176,7 +187,7 @@ def test_pipeline_export_filters_probe(spark, sf_dir, tmp_path):
     ) + np.array(
         [_local_idx(spark, r.kgram, w) for r in some], dtype=np.int64
     )
-    assert bf_contains(bytes(bits), idx).all()
+    assert bloom.contains_local(bits, idx).all()
 
 
 def _local_idx(spark, kgram, w):
@@ -547,14 +558,18 @@ def test_stateful_streaming_cms_equals_batch(spark, sf_dir, tmp_path):
 
 
 def test_export_from_slices_byte_equal_to_concat_path(spark, sf_dir, tmp_path):
-    """The streaming slice-by-slice export (no whole-filter byte array —
-    the path that survives >2GB filters) must emit byte-identical files
-    to the concat-table export, both formats, including zero-fill for
-    absent partitions."""
-    from kmtricks_spark.operators.bloom_stage import bf_slices, hash_counts
+    """The streaming export writes, per sample, its header followed by
+    exactly the bf_concat filter bytes, in both formats, including the
+    zero-fill for an absent partition."""
+    from kmtricks_spark.operators.bloom_stage import bf_concat, bf_slices, hash_counts
     from kmtricks_spark.operators.count import count_kgrams
-    from kmtricks_spark.sources.howde import export_filters, export_filters_from_slices
-    from kmtricks_spark.operators.bloom_stage import bf_concat
+    from kmtricks_spark.sources.howde import (
+        HOWDE_HEADER_SIZE,
+        BFHeader,
+        export_filters,
+        read_bf_file,
+        read_bf_file_howdesbt,
+    )
 
     inp = os.path.join(sf_dir, "documents.parquet")
     counts = count_kgrams(spark.read.parquet(inp), CFG)
@@ -562,14 +577,23 @@ def test_export_from_slices_byte_equal_to_concat_path(spark, sf_dir, tmp_path):
     s0 = counts.select("sample_id").orderBy("sample_id").first()[0]
     counts = counts.where(~((F.col("sample_id") == s0) & (F.col("part_id") == 3)))
     slices = bf_slices(hash_counts(counts, CFG), CFG).cache()
-    filters = bf_concat(slices, CFG)
-    for fmt in ("kmbf", "howdesbt"):
-        a_dir, b_dir = str(tmp_path / f"a_{fmt}"), str(tmp_path / f"b_{fmt}")
-        pa = sorted(export_filters(filters, a_dir, CFG, bf_format=fmt))
-        pb = sorted(export_filters_from_slices(slices, b_dir, CFG, bf_format=fmt))
-        assert [os.path.basename(x) for x in pa] == [os.path.basename(x) for x in pb]
-        for x, y in zip(pa, pb):
-            assert open(x, "rb").read() == open(y, "rb").read(), (fmt, x)
+    filters = {r.sample_id: (bytes(r.filter), r.total_set) for r in bf_concat(slices, CFG).collect()}
+    w = CFG.window_bytes
+    assert filters[s0][0][3 * w:4 * w] == bytes(w)
+    for fmt, ext, data_at in (("kmbf", "kmbf", 44), ("howdesbt", "bf", HOWDE_HEADER_SIZE + 8)):
+        paths = export_filters(slices, str(tmp_path / fmt), CFG, bf_format=fmt)
+        assert sorted(os.path.basename(p) for p in paths) == sorted(f"{s}.{ext}" for s in filters)
+        for p in paths:
+            blob, total_set = filters[os.path.basename(p)[: -len(ext) - 1]]
+            raw = open(p, "rb").read()
+            assert raw[data_at:] == blob, (fmt, p)
+            if fmt == "kmbf":
+                hdr, _ = read_bf_file(p)
+                assert hdr == BFHeader(CFG.k, len(blob) * 8, CFG.nb_partitions,
+                                       CFG.window_bits, total_set)
+            else:
+                hdr, _ = read_bf_file_howdesbt(p)
+                assert (hdr.k, hdr.num_bits) == (CFG.k, len(blob) * 8)
     slices.unpersist()
 
 

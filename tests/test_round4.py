@@ -567,31 +567,28 @@ def test_load_plugin_validation():
 
 # ----------------------------------------------- howdesbt magic knob
 
-def test_howde_magic_knob_roundtrip(tmp_path):
-    """A write parameterized with external magic constants round-trips
-    through a reader configured the same way, and the default-configured
-    reader REFUSES the foreign file (so interop with a real howdesbt
-    build is a pure constant swap, never a code change)."""
+def test_howde_magic_knob_roundtrip(slices_frame, tmp_path, monkeypatch):
+    """An export with external magic constants round-trips through a
+    reader configured the same way, and the default-configured reader
+    REFUSES the foreign file (so interop with a real howdesbt build is a
+    pure constant swap, never a code change)."""
     import numpy as np
 
-    from kmtricks_spark.sources.howde import (
-        BFHeader,
-        read_bf_file_howdesbt,
-        write_bf_file_howdesbt,
-    )
+    from kmtricks_spark import KmConfig
+    from kmtricks_spark.sources import howde
 
-    ext_magic = int.from_bytes(b"EXTBFMAG", "little")
-    ext_un = int.from_bytes(b"EXTBFUNF", "little")
-    rng = np.random.default_rng(4)
-    bits = rng.integers(0, 256, size=1024, dtype=np.uint8).tobytes()
-    hdr = BFHeader(k=8, num_bits=8192, nb_partitions=0, window_bits=0, n_set=-1)
-    p = str(tmp_path / "ext.bf")
-    write_bf_file_howdesbt(p, hdr, bits, magic=ext_magic, magic_un=ext_un)
-    back_hdr, back_bits = read_bf_file_howdesbt(p, magic=ext_magic, magic_un=ext_un)
+    monkeypatch.setattr(howde, "HOWDE_MAGIC", int.from_bytes(b"EXTBFMAG", "little"))
+    monkeypatch.setattr(howde, "HOWDE_MAGIC_UN", int.from_bytes(b"EXTBFUNF", "little"))
+    cfg = KmConfig(k=8, nb_partitions=2, bloom_bits=8192)
+    bits = np.random.default_rng(4).integers(0, 256, size=1024, dtype=np.uint8).tobytes()
+    frame = slices_frame({("ext", 0): bits[:512], ("ext", 1): bits[512:]})
+    (p,) = howde.export_filters(frame, str(tmp_path), cfg, bf_format="howdesbt")
+    back_hdr, back_bits = howde.read_bf_file_howdesbt(p)
     assert back_hdr.k == 8 and back_hdr.num_bits == 8192
     assert back_bits.tobytes() == bits
+    monkeypatch.undo()
     with pytest.raises(ValueError, match="bad howdesbt magic"):
-        read_bf_file_howdesbt(p)  # default constants: foreign file refused
+        howde.read_bf_file_howdesbt(p)  # default constants: foreign file refused
 
 
 # ------------------------------------------ Iceberg real-catalog path
