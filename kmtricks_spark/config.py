@@ -72,6 +72,10 @@ class KmConfig:
         return replace(self, **kw)
 
 
+# ~120 classes per Pipeline.run + bf_probe, ~105 per curate_run: Spark's 100 thrashes
+CODEGEN_CACHE_ENTRIES = 1000
+
+
 def get_spark(
     cores: int | None = None,
     app: str = "kmtricks_spark",
@@ -82,6 +86,16 @@ def get_spark(
 
     On a real cluster these confs move to spark-submit; the plan code is
     identical (nothing here depends on local mode).
+
+    The codegen cache holds ``CODEGEN_CACHE_ENTRIES`` compiled classes
+    instead of Spark's 100, and generated class names leave out the
+    codegen stage id, so a session that calls ``Pipeline.run`` or
+    ``curate_run`` more than once compiles each class once (kmtricks
+    compiles its k-width specialisations once, at build time). The cache
+    is keyed by the generated source, so it never serves a stale result.
+    A session not built here should set the same two confs;
+    ``spark.sql.codegen.cache.maxEntries`` is static, so it must be set
+    before the session starts.
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     b = (
@@ -99,6 +113,10 @@ def get_spark(
             os.environ.get("SPARK_GC_OPTS", ""),
         )
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # AQE numbers codegen stages in the order they are planned, which
+        # varies: with the id in the class name, the same code misses the cache
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

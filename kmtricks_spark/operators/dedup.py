@@ -134,7 +134,12 @@ def minhash_lsh_pairs(
     by the ContextCleaner when the frame is garbage-collected (no
     release handle to leak, no CacheManager entry that a later
     identical-plan invocation would silently cache-hit against — each
-    call recomputes its signatures exactly once from its inputs).
+    call recomputes its signatures exactly once from its inputs), and
+    not checkpoint(), which needs a reliable checkpoint directory.
+    Failure mode: the blocks live only on the executors, so a lost
+    executor fails the call instead of recomputing them. Recovery:
+    rerun the call, or run it inside ``curate_run``, whose resume
+    restarts at the dedup gate with every upstream gate read back.
     """
     sigs = sigs.localCheckpoint()
     banded = sigs.select(
@@ -453,7 +458,13 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     plan, which doubles in depth every iteration and overwhelms Catalyst
     after ~20 rounds (the classic iterative-DataFrame trap); an eager
     local checkpoint truncates lineage to the materialized blocks,
-    keeping round r's plan the same size as round 1's.
+    keeping round r's plan the same size as round 1's. Its blocks are
+    private to the call (not persist(), whose CacheManager entry a later
+    identical plan would hit) and need no reliable checkpoint directory
+    (not checkpoint()). Failure mode: a lost executor fails the call
+    instead of recomputing the blocks; recovery is to rerun it, or to
+    run it inside ``curate_run``, whose resume restarts at the dedup
+    gate.
     """
     edges = (
         pairs.select(F.col("a").alias("x"), F.col("b").alias("y"))

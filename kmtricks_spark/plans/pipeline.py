@@ -67,6 +67,15 @@ class Pipeline:
             raise ValueError(f"bloom_mode must be one of {BLOOM_MODES}, got {cfg.bloom_mode!r}")
         if cfg.bloom_mode == "bfc":
             check_bfc_width(cfg.bfc_width)
+        if restrict_to is not None and (
+            not restrict_to or any(not 0 <= p < cfg.nb_partitions for p in restrict_to)
+        ):
+            # an id outside [0, P) names no partition: a list of only such
+            # ids would write empty tables and report them done
+            raise ValueError(
+                f"restrict_to must be a non-empty list of partition ids in "
+                f"[0, {cfg.nb_partitions}), got {restrict_to!r}"
+            )
         if export_bf and cfg.bloom_mode == "bfc":
             raise ValueError(
                 "--export-filters is only supported for bloom_mode bf/bft "

@@ -1,7 +1,7 @@
 """Bloom stage end-to-end: membership of all counted kgrams, measured FPR
 vs the analytic bound (utils.hpp:239-243), bf == bft equivalence, bfc
 cells against the packc kernel, bf_probe against the numpy bit check,
-Bloom config refusal, and pure-JVM plans."""
+Bloom config and restrict_to refusal, and pure-JVM plans."""
 
 import os
 
@@ -171,6 +171,19 @@ def test_pipeline_refuses_bad_bloom_config_before_any_work(spark, sf_dir, tmp_pa
     rd = tmp_path / "run"
     with pytest.raises(ValueError, match=match):
         Pipeline(spark, cfg, str(rd), os.path.join(sf_dir, "documents.parquet")).run()
+    assert not rd.exists()
+
+
+@pytest.mark.parametrize("restrict", [[], [CFG.nb_partitions], [0, -1]],
+                         ids=["empty", "past_last", "negative"])
+def test_pipeline_refuses_bad_restrict_to_before_any_work(spark, sf_dir, tmp_path, restrict):
+    """An empty restrict_to selects no row, and an id outside
+    [0, nb_partitions) names no partition: both are refused at
+    construction, with no stage table and no lineage file."""
+    rd = tmp_path / "run"
+    with pytest.raises(ValueError, match="restrict_to"):
+        Pipeline(spark, CFG, str(rd), os.path.join(sf_dir, "documents.parquet"),
+                 restrict_to=restrict).run()
     assert not rd.exists()
 
 
